@@ -1,7 +1,10 @@
 package graft.loader
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import graft.core.{CanNotUploadFileException, SchemaChangedException}
 
@@ -55,12 +58,15 @@ object Compaction {
     * exists and is still under `limit` bytes. Enforces the strict schema
     * gate: the existing file's columns (names and types) must equal the
     * stream schema exactly, else [[SchemaChangedException]] — schema
-    * evolution is rejected, never merged. */
+    * evolution is rejected, never merged. The file's schema comes from its
+    * footer, read on the driver ([[footerSchema]]), so the preload costs no
+    * schema-inference job. */
   def readMostRecentFile(spark: SparkSession, dir: String,
       expectedSchema: StructType, limit: Long): Option[(DataFrame, Path)] = {
     val hfs = fs(spark, dir)
     mostRecentFile(hfs, dir).filter(_.getLen < limit).map { status =>
-      val df = spark.read.parquet(status.getPath.toString)
+      val df = spark.read.schema(footerSchema(spark, status))
+        .parquet(status.getPath.toString)
       // _sdc_* stamps are loader-internal bookkeeping, not tap schema: a
       // stream toggling versioned replication or add_record_metadata must
       // not read as schema drift (the sink NULL-aligns the columns at union)
@@ -77,6 +83,20 @@ object Compaction {
     }
   }
 
+  /** The Spark schema of one parquet file, from its footer alone: the
+    * schema Spark stored under `org.apache.spark.sql.parquet.row.metadata`
+    * when it wrote the file, else the parquet schema converted by
+    * `ParquetToSparkSchemaConverter` — the same rule (and session conf)
+    * `spark.read.parquet` applies, without its schema-inference job. */
+  def footerSchema(spark: SparkSession, status: FileStatus): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status,
+      spark.sparkContext.hadoopConfiguration))
+    try ParquetFileFormat.readSchemaFromFooter(
+      new Footer(status.getPath, reader.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    finally reader.close()
+  }
+
   /** Write `df` as exactly ONE parquet file at `target`: stage into
     * `{target}_new_tmp/`, then rename the single part file over `target`
     * (last-writer-wins replace, like the reference's `_new` + `hdfs.move`,
@@ -88,13 +108,20 @@ object Compaction {
     * left in place and an exception raised, so committed data is never
     * silently lost. Like the reference's delete+move pair, the window
     * between delete and rename is not atomic; a crash there leaves the
-    * staged copy recoverable under `_new_tmp`. */
+    * staged copy recoverable under `_new_tmp`.
+    *
+    * The staging dir is private to this write and only replaces `target`
+    * after the write succeeds, so it commits with the v2 file committer
+    * (tasks commit straight into it: no job-level rename pass) and without
+    * a `_SUCCESS` marker — fewer renames and listings per flush. */
   def writeSingleFile(spark: SparkSession, df: DataFrame, target: Path,
       compression: String): Unit = {
     val hfs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = new Path(target.getParent, target.getName + "_new_tmp")
     df.coalesce(1).write.mode("overwrite")
       .option("compression", compression)
+      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .parquet(staging.toString)
     val parts = hfs.listStatus(staging)
       .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))

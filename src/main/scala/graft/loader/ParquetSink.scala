@@ -18,6 +18,10 @@ import graft.core.GraftConfig
   *    (columnar UNION ALL, `unionByName`), rewrite as a single file with an
   *    atomic replace. The schema gate throws [[graft.core.SchemaChangedException]]
   *    on any drift.
+  *
+  * `write` commits whatever batch it is given and runs no emptiness check:
+  * the caller knows its record counts ([[SingerLoader]] counts every stream
+  * in its control pass and skips streams with nothing to write).
   */
 class ParquetSink(spark: SparkSession, config: GraftConfig,
     val streamName: String, val streamSchema: StructType) {
@@ -28,8 +32,6 @@ class ParquetSink(spark: SparkSession, config: GraftConfig,
     config.partitionCols.isEmpty && !config.skipExistingFiles
 
   def write(batch: DataFrame): Unit = {
-    // schema-only stream (no records): the reference writes no file either
-    if (batch.isEmpty) return
     val preload =
       if (compactionEnabled)
         Compaction.readMostRecentFile(spark, dir, streamSchema,

@@ -8,15 +8,21 @@ import graft.schema.{Flattener, JsonSchemaConverter}
 /** The Singer → partitioned-parquet dataflow, Spark-first (reference
   * pipeline: target_hdfs/target.py + sinks.py; see SURVEY §3.1).
   *
-  * Control plane (SCHEMA / STATE / ACTIVATE_VERSION — a handful of lines)
-  * is parsed on the driver; the record plane never leaves the executors:
-  * records are routed by `get_json_object` on the raw line (one parse pass,
-  * persisted so the per-stream writes re-read the routed cache instead of
-  * rescanning raw input), parsed with `from_json` against the stream's
-  * converted `StructType`, flattened and projected as pure Catalyst
-  * expressions, and written by the parquet writer. No per-record driver
-  * loop anywhere: parallelism is the number of input splits, and the only
-  * shuffle is the optional repartition by `partition_cols`.
+  * Control plane (SCHEMA / STATE / ACTIVATE_VERSION / BATCH — a handful
+  * of lines) is reduced by ONE grouped aggregate ([[controlPass]]) and
+  * parsed on the driver; the same pass yields the protocol checks and each
+  * stream's record count, which decide the rest of the sync without further
+  * Spark actions (no emptiness probes for streams the pass counted,
+  * `METRIC` record counters on stderr). Record validation then runs as one
+  * aggregate over every constrained stream before any stream is written.
+  * The record plane never leaves the executors: records are routed by
+  * `json_tuple` on the raw line (one parse pass, persisted so the
+  * per-stream writes re-read the routed cache instead of rescanning raw
+  * input), parsed with `from_json` against the stream's converted
+  * `StructType`, flattened and projected as pure Catalyst expressions, and
+  * written by the parquet writer. No per-record driver loop anywhere:
+  * parallelism is the number of input splits, and the only shuffles are the
+  * two small aggregates and the optional repartition by `partition_cols`.
   *
   * Protocol strictness (singer-sdk parity): lines without a `type`, RECORDs
   * without a payload, RECORDs for undeclared streams, and conflicting
@@ -50,45 +56,31 @@ object SingerLoader {
     *                     appends across triggers) */
   def load(spark: SparkSession, lines: Dataset[String], config: GraftConfig,
       knownSchemas: Map[String, SchemaMessage] = Map.empty): LoadResult = {
-    // one parse pass over the input, cached for every consumer below —
-    // json_tuple extracts all three routing fields from a SINGLE json parse
-    // (three get_json_object calls would each re-parse the line)
     // NOT spread: unlike the parquet tables, text input is byte-range
     // splittable (openCost-floored), so the parse already parallelizes;
     // a repartition ahead of it was measured ~25% SLOWER at 100k rows —
     // shuffling the raw JSON strings costs more than the extra cores win.
-    val routed = lines.toDF("value")
-      .filter(length(trim(col("value"))) > 0)
-      .select(col("value"),
-        json_tuple(col("value"), "type", "stream", "record", "version",
-          "time_extracted"))
-      .toDF("value", "t", "stream", "record", "version", "te")
-      .persist()
+    val routed = route(lines).persist()
     // one wall-clock stamp per load, shared by every stream (singer-sdk's
     // sync_started_at); only meaningful when add_record_metadata is on
     val syncStartedAt = new java.sql.Timestamp(System.currentTimeMillis())
     try {
-      // ---- protocol validation (one aggregation job) ----
-      val knownTypes =
-        Seq("RECORD", "SCHEMA", "STATE", "ACTIVATE_VERSION", "BATCH")
-      val probe = routed.agg(
-        max(when(col("t").isNull, col("value"))).as("untyped"),
-        max(when(col("t") === "RECORD" && col("record").isNull, col("value")))
-          .as("null_record"),
-        max(when(!col("t").isin(knownTypes: _*), col("t")))
-          .as("unknown_type")).collect().head
-      if (probe.getString(0) != null)
-        throw new InvalidConfigException(
-          s"line without a Singer 'type': ${probe.getString(0).take(200)}")
-      if (probe.getString(1) != null)
-        throw new InvalidConfigException(
-          s"RECORD message without a record payload: ${probe.getString(1).take(200)}")
-      if (probe.getString(2) != null)
-        throw new InvalidConfigException(
-          s"unknown Singer message type: ${probe.getString(2)}")
-
-      // ---- control plane: reduced to a BOUNDED set before collect ----
-      val control = controlMessages(routed)
+      // ---- control plane: ONE grouped aggregate, ONE bounded collect ----
+      val pass = controlPass(routed).collect()
+      def rows(kind: String) = pass.filter(_.getAs[String]("kind") == kind)
+      rows("untyped").headOption.foreach(r => throw new InvalidConfigException(
+        s"line without a Singer 'type': ${r.getAs[String]("last").take(200)}"))
+      rows("null_record").headOption.foreach(r => throw new InvalidConfigException(
+        s"RECORD message without a record payload: ${r.getAs[String]("last").take(200)}"))
+      rows("unknown").headOption.foreach(r => throw new InvalidConfigException(
+        s"unknown Singer message type: ${r.getAs[String]("key")}"))
+      // SCHEMA / ACTIVATE_VERSION / BATCH as first-seen distinct lines in
+      // input order, then the single last STATE
+      val control = (rows("control").sortBy(_.getAs[Long]("ord")) ++ rows("state"))
+        .map(r => SingerMessage.parse(r.getAs[String]("last")))
+      val records = rows("record").map(r => r.getAs[String]("key") ->
+        StreamRecords(r.getAs[Long]("n"), r.getAs[Boolean]("versioned"),
+          Option(r.getAs[java.lang.Long]("max_version")).map(_.longValue))).toMap
 
       val schemas = scala.collection.mutable.LinkedHashMap.empty[String, SchemaMessage]
       knownSchemas.foreach { case (k, v) => schemas(k) = v }
@@ -113,32 +105,37 @@ object SingerLoader {
       if (batchOrphans.nonEmpty)
         throw new InvalidConfigException(
           s"BATCH messages for streams with no SCHEMA: ${batchOrphans.mkString(", ")}")
-
       // records for a stream with no SCHEMA are a protocol violation
-      // (singer-sdk raises on RECORD-before-SCHEMA; so do we); the same
-      // per-stream pass notes which streams carry RECORD-level `version`
-      // stamps (full-table replication), so stamping below is data-driven
-      val perStream = routed.filter(col("t") === "RECORD")
-        .groupBy(col("stream"))
-        .agg(max(col("version").isNotNull).as("versioned")).collect()
-      val orphan = perStream.map(_.getString(0)).filterNot(schemas.contains)
+      // (singer-sdk raises on RECORD-before-SCHEMA; so do we)
+      val orphan = records.keys.filterNot(schemas.contains)
       if (orphan.nonEmpty)
         throw new InvalidConfigException(
           s"RECORD messages for streams with no SCHEMA: ${orphan.mkString(", ")}")
-      val versionedStreams =
-        perStream.filter(_.getBoolean(1)).map(_.getString(0)).toSet
+      def recordsOf(stream: String) =
+        records.getOrElse(stream, StreamRecords(0L, versioned = false, None))
 
-      // ---- record plane: fully distributed per stream ----
       // stream-level stream maps resolve each input stream to its output
       // name (aliasing) or to suppression (`__NULL__` / `__else__`
       // catch-all) BEFORE any record work — a suppressed stream costs
-      // nothing beyond its control-plane entry
-      schemas.values.foreach { sm =>
-       config.resolveStream(sm.stream).foreach { outStream =>
-        // JSON-Schema validation covers inline RECORDs; BATCH files are
-        // tap-encoded bulk payloads and bypass per-record validation
-        // (singer-sdk parity: batch mode skips record-level processing)
-        if (config.validateRecords) validateStream(routed, sm)
+      // nothing beyond its control-plane entry. A schema-only stream writes
+      // no file (the reference writes none either); the pass's count decides
+      // that without a Spark job.
+      val toWrite = schemas.values.toSeq.flatMap { sm =>
+        config.resolveStream(sm.stream).map(out => (sm, out, recordsOf(sm.stream),
+          batchesByStream.getOrElse(sm.stream, Nil).flatMap(_.manifest)))
+      }.filter { case (_, _, recs, files) => recs.n > 0 || files.nonEmpty }
+      // JSON-Schema validation covers inline RECORDs (BATCH files are
+      // tap-encoded bulk payloads and bypass per-record validation —
+      // singer-sdk parity). It runs for every stream BEFORE any stream is
+      // written, so a violation anywhere leaves no partial batch behind.
+      if (config.validateRecords)
+        validate(routed, toWrite.collect { case (sm, _, recs, _) if recs.n > 0 => sm })
+
+      // ---- record plane: fully distributed per stream ----
+      // the version each stream's just-committed rows are known to reach,
+      // which lets ACTIVATE_VERSION skip its emptiness job
+      val committedVersion = scala.collection.mutable.Map.empty[String, Long]
+      toWrite.foreach { case (sm, outStream, recs, batchFiles) =>
         val nested = JsonSchemaConverter.toStructType(sm.schemaJson)
         val inline = routed
           .filter(col("t") === "RECORD" && col("stream") === sm.stream)
@@ -149,18 +146,14 @@ object SingerLoader {
         // identical parse → flatten → stream-maps → extra-fields path as
         // inline RECORDs (q69_batch_ingest asserts byte-identical output) —
         // batch rows just carry no message-level version/time_extracted.
-        val raw = batchesByStream.get(sm.stream) match {
-          case Some(bms) =>
-            val files = bms.flatMap(_.manifest)
-            if (files.isEmpty) inline
-            else inline.unionByName(
-              spark.read.textFile(files: _*).toDF("record")
-                .filter(length(trim(col("record"))) > 0)
-                .select(col("record"),
-                  lit(null).cast("string").as("version"),
-                  lit(null).cast("string").as("te")))
-          case None => inline
-        }
+        val raw =
+          if (batchFiles.isEmpty) inline
+          else inline.unionByName(
+            spark.read.textFile(batchFiles: _*).toDF("record")
+              .filter(length(trim(col("record"))) > 0)
+              .select(col("record"),
+                lit(null).cast("string").as("version"),
+                lit(null).cast("string").as("te")))
         // non-record columns stamped alongside the parsed payload:
         //  - `_sdc_table_version` when the stream is version-stamped
         //    (full-table replication; ACTIVATE_VERSION purges by it —
@@ -171,7 +164,7 @@ object SingerLoader {
         //    and the sequence is an opaque per-load monotonic id (the SDK
         //    uses consumption-time epoch-millis — equally opaque)
         val extras = Seq.newBuilder[(String, org.apache.spark.sql.Column)]
-        if (versionedStreams(sm.stream))
+        if (recs.versioned)
           extras += VersionPurge.SdcTableVersionCol -> col("version").cast("long")
         if (config.addRecordMetadata) {
           extras += "_sdc_extracted_at" -> col("te").cast("timestamp")
@@ -190,15 +183,21 @@ object SingerLoader {
         val stamped = extraCols.map(_._1).toSet
         val recordFields = nested.fieldNames.toSeq.filterNot(stamped)
           .map(f => col(s"r.`$f`").as(f))
-        val records = raw
+        val parsed = raw
           .select(from_json(col("record"), nested,
             Map("mode" -> "FAILFAST")).as("r") +:
             extraCols.map { case (n, c) => c.as(n) }: _*)
           .select(recordFields ++ extraCols.map(p => col(p._1)): _*)
-        val transformed = transform(records, sm.stream, config)
-        new ParquetSink(spark, config, outStream, transformed.schema)
-          .write(transformed)
-       }
+        val transformed = transform(parsed, sm.stream, config)
+        // only a `__filter__` or BATCH files the driver has not counted
+        // can leave the batch empty; those pay one emptiness job
+        val filtered =
+          config.streamProperties(sm.stream).get(StreamMaps.FilterKey).flatten.isDefined
+        if (!((filtered || recs.n == 0) && transformed.isEmpty)) {
+          new ParquetSink(spark, config, outStream, transformed.schema)
+            .write(transformed)
+          if (!filtered) recs.maxVersion.foreach(committedVersion(outStream) = _)
+        }
       }
 
       // ACTIVATE_VERSION: after the batch's records are committed, purge
@@ -208,39 +207,81 @@ object SingerLoader {
       val acts = activates.result()
       acts.foreach { av =>
         config.resolveStream(av.stream).foreach(out =>
-          VersionPurge.activate(spark, config, out, av.version))
+          VersionPurge.activate(spark, config, out, av.version,
+            committedVersion.get(out)))
+      }
+
+      // Singer-SDK-style per-stream record counters (inline RECORDs this
+      // batch carried), read off the control pass — no extra Spark job
+      (control.collect { case sm: SchemaMessage => sm.stream } ++
+          records.keys).distinct.foreach { s =>
+        Console.err.println(recordCountMetric(s, recordsOf(s).n))
       }
 
       LoadResult(schemas.keys.toSeq, lastState, acts, schemas.toMap)
     } finally routed.unpersist()
   }
 
-  /** Control-plane reduction to a BOUNDED collect. A protocol-conformant
-    * tap emits a handful of control lines, but nothing stops one from
-    * emitting STATE after every record (some do) — collecting every
-    * non-RECORD line verbatim would OOM the driver on a large replay.
-    * Reduce distributively first: STATE collapses to the single last
-    * message in input order (`monotonically_increasing_id` follows the
-    * partition order that already defines this batch's "last STATE wins"
-    * semantics — see the ordering note in the class doc), and
-    * SCHEMA / ACTIVATE_VERSION / BATCH collapse to their first-seen
-    * DISTINCT lines (a tap re-emitting its SCHEMA before every record
-    * collapses to one row per distinct schema; in-batch conflict detection
-    * needs exactly the distinct set). Collected volume is
-    * O(distinct control lines) + 1, independent of input length. */
-  private[graft] def controlMessages(
-      routed: DataFrame): Seq[SingerMessage] = {
-    val ordered = routed.filter(col("t") =!= "RECORD")
-      .select(col("value"), col("t"),
+  /** Per-stream inline RECORD facts from the control pass: how many, whether
+    * any carries a message-level `version` (full-table replication), and the
+    * largest such version. */
+  private final case class StreamRecords(n: Long, versioned: Boolean,
+      maxVersion: Option[Long])
+
+  private val KnownTypes = Seq("RECORD", "SCHEMA", "STATE", "ACTIVATE_VERSION", "BATCH")
+
+  /** The routing parse: `json_tuple` extracts every routing field from a
+    * SINGLE json parse per line (separate `get_json_object` calls would each
+    * re-parse it); blank lines are dropped. */
+  private[graft] def route(lines: Dataset[String]): DataFrame =
+    lines.toDF("value")
+      .filter(length(trim(col("value"))) > 0)
+      .select(col("value"),
+        json_tuple(col("value"), "type", "stream", "record", "version",
+          "time_extracted"))
+      .toDF("value", "t", "stream", "record", "version", "te")
+
+  /** The whole control plane as ONE grouped aggregate over the routed lines,
+    * grouped by (`kind`, `key`):
+    *  - `untyped` / `null_record` (key NULL) and `unknown` (key = the type):
+    *    protocol violations, carried with an example line;
+    *  - `record` (key = stream): per-stream count, whether any RECORD carries
+    *    a `version`, and the largest version;
+    *  - `state` (key NULL): the LAST STATE in input order —
+    *    `monotonically_increasing_id` follows the partition order that
+    *    already defines this batch's "last STATE wins" semantics (see the
+    *    ordering note in the class doc);
+    *  - `control` (key = the line): SCHEMA / ACTIVATE_VERSION / BATCH as
+    *    DISTINCT lines with their first position (a tap re-emitting its
+    *    SCHEMA before every record collapses to one row; in-batch conflict
+    *    detection needs exactly the distinct set).
+    * A tap may emit STATE after every record (some do), so collecting
+    * control lines verbatim could OOM the driver on a large replay; this
+    * collect holds #streams + #distinct control lines + a few rows,
+    * independent of input length. */
+  private[graft] def controlPass(routed: DataFrame): DataFrame = {
+    val t = col("t")
+    val kind =
+      when(t.isNull, "untyped")
+        .when(t === "RECORD" && col("record").isNull, "null_record")
+        .when(!t.isin(KnownTypes: _*), "unknown")
+        .when(t === "RECORD", "record")
+        .when(t === "STATE", "state")
+        .otherwise("control")
+    routed
+      .select(kind.as("kind"), col("value"), col("stream"), t, col("version"),
         monotonically_increasing_id().as("ord"))
-    val lastState = ordered.filter(col("t") === "STATE")
-      .agg(max_by(col("value"), col("ord")).as("value"))
-      .collect().headOption.flatMap(r => Option(r.getString(0)))
-    val rest = ordered.filter(col("t") =!= "STATE")
-      .groupBy(col("value")).agg(min(col("ord")).as("ord"))
-      .orderBy(col("ord")).select(col("value"))
-      .collect().map(_.getString(0)).toSeq
-    (rest ++ lastState).map(SingerMessage.parse)
+      .groupBy(col("kind"),
+        when(col("kind") === "record", col("stream"))
+          .when(col("kind") === "control", col("value"))
+          .when(col("kind") === "unknown", t).as("key"))
+      .agg(
+        min(col("ord")).as("ord"),
+        // records never need their line back: keep it out of the collect
+        max_by(when(col("kind") =!= "record", col("value")), col("ord")).as("last"),
+        count(lit(1)).as("n"),
+        max(col("version").isNotNull).as("versioned"),
+        max(expr("try_cast(version AS BIGINT)")).as("max_version"))
   }
 
   /** JSON-Schema record validation (singer-sdk parity, reference standard
@@ -249,26 +290,45 @@ object SingerLoader {
     * admits "null" — `json_object_keys` gives exact presence semantics,
     * where a post-parse NULL check could not tell missing from null), and
     * every `key_properties` column must be non-NULL (it is the primary
-    * key). One counting aggregation over the already-persisted routed
-    * cache — streams that declare no constraints skip the pass entirely. */
-  private def validateStream(routed: DataFrame, sm: SchemaMessage): Unit = {
-    val required = JsonSchemaConverter.requiredFields(sm.schemaJson)
-    val violations: Seq[org.apache.spark.sql.Column] =
-      required.map(f =>
-        !array_contains(expr("json_object_keys(record)"), lit(f))) ++
-      sm.keyProperties.map(k => get_json_object(col("record"), s"$$['$k']").isNull)
-    if (violations.isEmpty) return
-    val bad = violations.reduce(_ || _)
-    val v = routed
-      .filter(col("t") === "RECORD" && col("stream") === sm.stream)
-      .agg(count(when(bad, 1)).as("n"),
-        max(when(bad, col("record"))).as("example")).collect().head
-    if (v.getLong(0) > 0)
-      throw new RecordValidationException(
-        s"stream '${sm.stream}': ${v.getLong(0)} record(s) violate the " +
-          s"declared schema (required: ${required.mkString(",")}; " +
-          s"key_properties: ${sm.keyProperties.mkString(",")}); " +
-          s"example: ${Option(v.getString(1)).getOrElse("").take(300)}")
+    * key). One counting aggregation, grouped by stream, over the persisted
+    * routed cache covers every constrained stream; streams that declare no
+    * constraints are not scanned, and with none the job is skipped. */
+  private def validate(routed: DataFrame, streams: Seq[SchemaMessage]): Unit = {
+    val checks = streams.flatMap { sm =>
+      val required = JsonSchemaConverter.requiredFields(sm.schemaJson)
+      val violations =
+        required.map(f =>
+          !array_contains(expr("json_object_keys(record)"), lit(f))) ++
+        sm.keyProperties.map(k => get_json_object(col("record"), s"$$['$k']").isNull)
+      violations.reduceOption(_ || _).map(bad => (sm, required, bad))
+    }
+    if (checks.isEmpty) return
+    val bad = checks.tail.foldLeft(
+      when(col("stream") === checks.head._1.stream, checks.head._3)) {
+      case (acc, (sm, _, b)) => acc.when(col("stream") === sm.stream, b)
+    }
+    val found = routed
+      .filter(col("t") === "RECORD" && col("stream").isin(checks.map(_._1.stream): _*))
+      .groupBy(col("stream"))
+      .agg(count(when(bad, 1)).as("n"), max(when(bad, col("record"))).as("example"))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getString(2))).toMap
+    checks.foreach { case (sm, required, _) =>
+      found.get(sm.stream).filter(_._1 > 0).foreach { case (n, example) =>
+        throw new RecordValidationException(
+          s"stream '${sm.stream}': $n record(s) violate the " +
+            s"declared schema (required: ${required.mkString(",")}; " +
+            s"key_properties: ${sm.keyProperties.mkString(",")}); " +
+            s"example: ${Option(example).getOrElse("").take(300)}")
+      }
+    }
+  }
+
+  /** singer-sdk 0.35's `record_count` counter line (its metrics logger's
+    * `METRIC: <json>` shape, `json.dumps` spacing). */
+  private def recordCountMetric(stream: String, n: Long): String = {
+    val quoted = new String(
+      com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance().quoteAsString(stream))
+    s"""METRIC: {"type": "counter", "metric": "record_count", "value": $n, "tags": {"stream": "$quoted"}}"""
   }
 
   /** The per-stream projection pipeline: flatten → stream maps → extra

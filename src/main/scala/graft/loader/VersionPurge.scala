@@ -42,8 +42,12 @@ object VersionPurge {
     * config between syncs must never read as schema drift. */
   def isLoaderInternal(name: String): Boolean = name.startsWith("_sdc_")
 
+  /** @param committedVersion a version this load has just committed rows of
+    *                         into the stream dir, if known: at or above
+    *                         `version`, some row survives, so the emptiness
+    *                         job is skipped */
   def activate(spark: SparkSession, config: GraftConfig, stream: String,
-      version: Long): Unit = {
+      version: Long, committedVersion: Option[Long] = None): Unit = {
     val dir = config.streamDir(stream)
     val hfs = Compaction.fs(spark, dir)
     val dirPath = new Path(dir)
@@ -60,7 +64,7 @@ object VersionPurge {
     val tmp = new Path(dirPath.getParent, dirPath.getName + "__purge_tmp")
     val old = new Path(dirPath.getParent, dirPath.getName + "__purge_old")
 
-    if (keep.isEmpty) {
+    if (!committedVersion.exists(_ >= version) && keep.isEmpty) {
       // nothing survives: a rewrite would commit a data-file-less dir that
       // breaks schema inference on the next read — remove the stream dir
       // instead (missing dir == empty stream everywhere in the loader),

@@ -107,4 +107,29 @@ class CompactionSpec extends AnyFunSuite {
     new java.io.File(s"$d/a.parquet").setLastModified(System.currentTimeMillis() + 5000)
     assert(Compaction.mostRecentFile(fs, d).get.getPath.getName === "a.parquet")
   }
+
+  test("preload schema read from the footer equals spark.read.parquet's") {
+    val wide = StructType(Seq(
+      StructField("ts", TimestampType), StructField("amount", DoubleType),
+      StructField("flag", BooleanType), StructField("name", StringType),
+      StructField("_sdc_table_version", LongType),
+      StructField("_sdc_received_at", TimestampType)))
+    val root = Files.createTempDirectory("graft-footer").toString
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(java.sql.Timestamp.valueOf("2024-01-02 03:04:05.123456"), 1.5, true,
+        "a", 7L, java.sql.Timestamp.valueOf("2024-01-02 03:04:06")),
+      Row(null, null, null, null, null, null)), 1), wide)
+    new ParquetSink(spark, GraftConfig(hdfsDestinationPath = root), "t", wide)
+      .write(df)
+    val fs = Compaction.fs(spark, s"$root/t")
+    val file = Compaction.mostRecentFile(fs, s"$root/t").get
+    val inferred = spark.read.parquet(file.getPath.toString).schema
+    val footer = Compaction.footerSchema(spark, file)
+    assert(footer.map(f => (f.name, f.dataType)) ===
+      inferred.map(f => (f.name, f.dataType)))
+    val (preload, _) =
+      Compaction.readMostRecentFile(spark, s"$root/t", wide, 1024 * 1024).get
+    assert(preload.schema === inferred)
+    assert(preload.collect().toSet === df.collect().toSet)
+  }
 }

@@ -582,7 +582,6 @@ class LoaderSpec extends AnyFunSuite {
 
   test("1M STATE lines reduce to a bounded collect with last-state-wins intact") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val n = 1000000L
     val states = spark.range(n)
       .map(i => s"""{"type": "STATE", "value": {"n": $i}}""")
@@ -591,17 +590,102 @@ class LoaderSpec extends AnyFunSuite {
       """{"type": "RECORD", "stream": "t", "record": {"col1": 1, "col2": "a", "col3": true}}"""))
     val lines = head.union(states)
 
-    // the distributive reduction must collect O(distinct control lines),
-    // not one row per STATE: 1 schema + 1 surviving state = 2 messages
-    val routed = lines.toDF("value")
-      .select(col("value"),
-        get_json_object(col("value"), "$.type").as("t"))
-    assert(SingerLoader.controlMessages(routed).size === 2)
+    // the fused control pass must collect O(streams + distinct control
+    // lines), not one row per STATE: 1 schema line + 1 record stream + 1
+    // surviving state
+    val collected = SingerLoader.controlPass(SingerLoader.route(lines)).collect()
+    assert(collected.length <= 3, collected.mkString("\n"))
 
     // end-to-end: the LAST state in input order wins
     val result = SingerLoader.load(spark, lines,
       GraftConfig(hdfsDestinationPath = tmpDir()))
     assert(result.lastState.exists(_.contains((n - 1).toString)))
     assert(result.streams === Seq("t"))
+  }
+
+  // ---- protocol failure paths of the control pass ------------------------
+
+  def loadFails[E <: Throwable](lines: Seq[String])(
+      implicit ct: scala.reflect.ClassTag[E]): E =
+    intercept[E](SingerLoader.loadFile(spark, writeFixture(lines),
+      GraftConfig(hdfsDestinationPath = tmpDir())))
+
+  test("a line without a type raises") {
+    val e = loadFails[graft.core.InvalidConfigException](
+      fixture :+ """{"stream": "t", "record": {"col1": 9}}""")
+    assert(e.getMessage === """line without a Singer 'type': {"stream": "t", "record": {"col1": 9}}""")
+  }
+
+  test("a RECORD without a record payload raises") {
+    val e = loadFails[graft.core.InvalidConfigException](
+      fixture :+ """{"type": "RECORD", "stream": "t"}""")
+    assert(e.getMessage ===
+      """RECORD message without a record payload: {"type": "RECORD", "stream": "t"}""")
+  }
+
+  test("an unknown message type raises") {
+    val e = loadFails[graft.core.InvalidConfigException](
+      fixture :+ """{"type": "BOGUS", "stream": "t"}""")
+    assert(e.getMessage === "unknown Singer message type: BOGUS")
+  }
+
+  test("conflicting SCHEMAs for one stream raise") {
+    val e = loadFails[graft.core.SchemaChangedException](fixture :+
+      """{"type": "SCHEMA", "stream": "t", "schema": {"type": "object", "properties": {"col1": {"type": "string"}}}}""")
+    assert(e.getMessage === "conflicting SCHEMA messages for stream 't' in one batch")
+  }
+
+  test("a validation failure in any stream writes no stream of the batch") {
+    val out = tmpDir()
+    val e = intercept[graft.core.RecordValidationException] {
+      SingerLoader.loadFile(spark, writeFixture(Seq(
+        """{"type": "SCHEMA", "stream": "a", "schema": {"type": "object", "properties": {"x": {"type": "integer"}}}}""",
+        requiredSchema,
+        """{"type": "RECORD", "stream": "a", "record": {"x": 1}}""",
+        """{"type": "RECORD", "stream": "r", "record": {"id": 1, "name": "ok"}}""",
+        """{"type": "RECORD", "stream": "r", "record": {"id": 2}}""")),
+        GraftConfig(hdfsDestinationPath = out))
+    }
+    assert(e.getMessage.startsWith("stream 'r': 1 record(s) violate"))
+    assert(!new java.io.File(s"$out/a").exists())
+    assert(!new java.io.File(s"$out/r").exists())
+  }
+
+  // ---- shortcuts taken from the control pass's counts --------------------
+
+  test("a __filter__ that drops every row writes no file") {
+    val out = tmpDir()
+    SingerLoader.loadFile(spark, writeFixture(fixture),
+      GraftConfig(hdfsDestinationPath = out,
+        streamMaps = Map("t" -> StreamMapSpec.Properties(Map(
+          "__filter__" -> Some("col1 > 100"))))))
+    assert(!new java.io.File(s"$out/t").exists())
+  }
+
+  test("ACTIVATE_VERSION above every committed version still removes the dir") {
+    val out = tmpDir()
+    // the batch commits v1 rows only, so the activated v2 keeps nothing:
+    // the emptiness job must run and remove the stream dir
+    SingerLoader.loadFile(spark, writeFixture(Seq(
+      versionedSchema,
+      """{"type": "RECORD", "stream": "v", "record": {"id": 1}, "version": 1}""",
+      """{"type": "ACTIVATE_VERSION", "stream": "v", "version": 2}""")),
+      GraftConfig(hdfsDestinationPath = out))
+    assert(!new java.io.File(s"$out/v").exists())
+  }
+
+  test("per-stream record_count METRIC lines go to stderr") {
+    val err = new java.io.ByteArrayOutputStream()
+    Console.withErr(new java.io.PrintStream(err, true, "UTF-8")) {
+      SingerLoader.loadFile(spark, writeFixture(Seq(
+        fixture.head,
+        """{"type": "SCHEMA", "stream": "e\"mpty", "schema": {"type": "object", "properties": {"x": {"type": "integer"}}}}""") ++
+        fixture.tail),
+        GraftConfig(hdfsDestinationPath = tmpDir()))
+    }
+    val metrics = err.toString("UTF-8").linesIterator.filter(_.startsWith("METRIC: ")).toSeq
+    assert(metrics === Seq(
+      """METRIC: {"type": "counter", "metric": "record_count", "value": 3, "tags": {"stream": "t"}}""",
+      """METRIC: {"type": "counter", "metric": "record_count", "value": 0, "tags": {"stream": "e\"mpty"}}"""))
   }
 }
