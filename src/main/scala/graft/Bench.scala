@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every declared query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
   * `{"metric":...,"value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -31,18 +29,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.getOrCreate("graft-bench")
 
     // ---- per-entry hygiene + forensics -------------------------------
     // Round-4 post-mortem: operators persist internal frames (and
@@ -367,14 +354,12 @@ object Bench {
         val joined = graft.streaming.StreamingDedup.intervalJoin(
           sside("a", 0), sside("b", 1), "a_user", "b_user", "a_ts", "b_ts",
           lateness = "1 hour", bound = "30 minutes")
-        val before = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try {
+        GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
           val q = joined.select(col("a_id"), col("b_id"))
             .writeStream.format("memory").queryName("warmup_ss_join")
             .outputMode("append").trigger(Trigger.AvailableNow()).start()
           q.awaitTermination()
-        } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+        }
       }
       } finally {
         wd.unpersist(); we.unpersist()

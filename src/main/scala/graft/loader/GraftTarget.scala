@@ -57,19 +57,7 @@ object GraftTarget {
     val prior = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession)
       .filter(s => !s.sparkContext.isStopped)
-    val spark = prior.getOrElse {
-      val s = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-        .appName("graft-target")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    val spark = prior.getOrElse(graft.GraftSession.getOrCreate("graft-target"))
     try {
       val result = SingerLoader.loadFile(spark, input, config)
       // state echo AFTER successful commit = at-least-once checkpoint

@@ -25,4 +25,20 @@ object Checkpoints {
     df.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(false))
+
+  /** Eagerly materialize a (small) operator result, then release the
+    * `persist`ed intermediates it was built from (sketch tables, vocab and
+    * model tables, cached aggregate inputs). They are only needed while
+    * the result's plan runs, and CacheManager holds persisted plans until
+    * an explicit unpersist, so a long-lived session calling the operator
+    * repeatedly would otherwise accumulate caches without bound. The
+    * returned frame stays persisted: it is the operator's output (pair,
+    * label, score or stats tables, far smaller than the corpus), and the
+    * caller `unpersist()`s it. */
+  def finalized(result: DataFrame, cached: DataFrame*): DataFrame = {
+    val out = result.persist()
+    out.count()
+    cached.foreach(_.unpersist(false))
+    out
+  }
 }

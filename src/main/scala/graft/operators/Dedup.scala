@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.HashExprs._
 import graft.functions.HashNative
+import Checkpoints.finalized
 
 /** Deduplication operators for large-scale text corpora.
   *
@@ -111,20 +112,6 @@ object Dedup {
     * At 100 TB the equivalent move is writing the sketch table to storage
     * once; MEMORY_AND_DISK is the single-job analog. */
   private def materialized(df: DataFrame): DataFrame = df.persist()
-
-  /** Eagerly materialize a (small) operator result, then release the
-    * intermediate sketch caches it was built from — sketch tables are only
-    * needed while the candidate+verify plan runs, and CacheManager holds
-    * persisted plans until explicit unpersist (a long-lived session calling
-    * dedup repeatedly would otherwise accumulate caches without bound). The
-    * returned frame stays persisted: it is the operator's output (pair /
-    * label tables, orders of magnitude smaller than the corpus). */
-  private def finalized(result: DataFrame, cached: DataFrame*): DataFrame = {
-    val out = result.persist()
-    out.count()
-    cached.foreach(_.unpersist(false))
-    out
-  }
 
   /** Jaccard(a, b) >= num/den as pure integer comparison. The NULL sentinel
     * (docs with <3 words) must never count as a shared shingle: Spark's

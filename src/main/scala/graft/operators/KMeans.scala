@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -66,29 +66,56 @@ object KMeans {
   /** Tie-break radix for the DECIMAL fallback packing. */
   private val TieRadix = 1000000000L
 
+  /** Next power of two > k-1: any radix > max cid orders (dist, cid)
+    * lexicographically; a small one maximizes the long headroom. */
+  private def radixFor(k: Int): Long =
+    math.max(java.lang.Long.highestOneBit(math.max(k - 1, 1)) * 2, 2L)
+
   /** How the per-round (dist, cid) argmin key is packed: a plain long when
     * the worst-case distance provably fits (`maxDist·radix + k < 2^63`),
-    * DECIMAL(32,0) otherwise. The bound is derived from the data in one
-    * cheap stats pass over the cached scaled vectors (also yields the
-    * vector dimension for the centroid recompute). */
-  private final case class Packing(useLong: Boolean, radix: Long, dim: Int)
+    * DECIMAL(32,0) otherwise. `dim` is the vector dimension for the
+    * centroid recompute. */
+  private final case class Packing(useLong: Boolean, radix: Long, dim: Int) {
+    def packed(dist: Column): Column =
+      if (useLong) dist * lit(radix) + col("cid")
+      else dist.cast("decimal(20,0)") * lit(TieRadix) + col("cid")
+    def unpack(c: Column): Column = c % (if (useLong) radix else TieRadix)
+  }
 
+  private object Packing {
+    /** The packing for `k` clusters over `dim`-wide vectors whose
+      * components differ by at most `span` between a row and a centroid:
+      * the worst-case squared L2 is `dim·span²`. */
+    def apply(k: Int, dim: Int, span: BigInt): Packing = {
+      val radix = radixFor(k)
+      Packing(BigInt(dim) * span.pow(2) * radix + k < BigInt(Long.MaxValue),
+        radix, dim)
+    }
+
+    /** No envelope known (an empty or all-null input): DECIMAL packing. */
+    def decimal(k: Int): Packing = Packing(useLong = false, radixFor(k), 0)
+
+    /** From a caller's static `envelopeHint = (dim, spanEmb, spanCent)`.
+      * A hint is trusted to skip the stats scans, so a non-positive one
+      * fails loudly instead of selecting a packing for nothing. */
+    def hinted(k: Int, hint: (Int, Long, Long)): Packing = {
+      val (dim, spanEmb, spanCent) = hint
+      require(dim > 0 && spanEmb > 0 && spanCent > 0,
+        s"envelopeHint needs dim, spanEmb, spanCent > 0; got $hint")
+      Packing(k, dim, BigInt(spanEmb) + BigInt(spanCent))
+    }
+  }
+
+  /** The packing bound from the data, in one cheap stats pass over the
+    * cached scaled vectors. */
   private def packing(scaled: DataFrame, k: Int): Packing = {
-    // next power of two > k-1: any radix > max cid orders (dist, cid)
-    // lexicographically; a small one maximizes the long headroom
-    val radix = math.max(java.lang.Long.highestOneBit(math.max(k - 1, 1)) * 2, 2L)
     val row = scaled
       .select(max(size(col("xs"))), max(expr("array_max(transform(xs, x -> abs(x)))")))
       .first()
-    if (row.isNullAt(0) || row.isNullAt(1)) Packing(useLong = false, radix, 0)
-    else {
-      val dim = row.getInt(0)
-      val maxAbs = BigInt(row.getLong(1))
-      // worst-case squared L2 between any two in-corpus vectors (centroid
-      // means never leave the per-dimension [-maxAbs, maxAbs] envelope)
-      val bound = BigInt(dim) * (2 * maxAbs).pow(2) * radix + k
-      Packing(bound < BigInt(Long.MaxValue), radix, dim)
-    }
+    if (row.isNullAt(0) || row.isNullAt(1)) Packing.decimal(k)
+    // worst-case squared L2 between any two in-corpus vectors (centroid
+    // means never leave the per-dimension [-maxAbs, maxAbs] envelope)
+    else Packing(k, row.getInt(0), 2 * BigInt(row.getLong(1)))
   }
 
   /** Per-round argmin as a TRUE hash aggregate — map-side combinable and
@@ -105,19 +132,11 @@ object KMeans {
     * buffer type. Returns (id, cid). */
   private def assignIds(scaled: DataFrame, cents: DataFrame,
       p: Packing): DataFrame = {
-    val dist = VecSqDist.vecSqDistLong(col("xs"), col("cs"))
-    val (packed, unpack) =
-      if (p.useLong)
-        (dist * lit(p.radix) + col("cid"),
-          (c: org.apache.spark.sql.Column) => c % p.radix)
-      else
-        (dist.cast("decimal(20,0)") * lit(TieRadix) + col("cid"),
-          (c: org.apache.spark.sql.Column) => c % TieRadix)
     scaled.crossJoin(broadcast(cents))
-      .withColumn("packed", packed)
+      .withColumn("packed", p.packed(VecSqDist.vecSqDistLong(col("xs"), col("cs"))))
       .groupBy(col("id"))
       .agg(min(col("packed")).as("p"))
-      .select(col("id"), unpack(col("p")).cast("long").as("cid"))
+      .select(col("id"), p.unpack(col("p")).cast("long").as("cid"))
   }
 
   /** Assignment-only pass against FROZEN per-group integer centroids
@@ -147,40 +166,24 @@ object KMeans {
     val scaled = emb.select(col(groupCol), col(idCol).cast("long").as("id"),
       expr(s"transform($vecCol, v -> CAST(round(CAST(v AS DOUBLE) * $scale.0) AS BIGINT))")
         .as("xs"))
-    val radix = math.max(java.lang.Long.highestOneBit(math.max(k - 1, 1)) * 2, 2L)
     val p = envelopeHint match {
-      case Some((dim, spanEmb, spanCent)) =>
-        val span = BigInt(spanEmb) + BigInt(spanCent)
-        val bound = BigInt(dim) * span.pow(2) * radix + k
-        Packing(bound < BigInt(Long.MaxValue), radix, dim)
+      case Some(hint) => Packing.hinted(k, hint)
       case None =>
         val rowS = scaled.select(max(size(col("xs"))),
           max(expr("array_max(transform(xs, x -> abs(x)))"))).first()
         val rowC = cents.select(max(size(col("cs"))),
           max(expr("array_max(transform(cs, x -> abs(x)))"))).first()
         if (rowS.isNullAt(0) || rowS.isNullAt(1) || rowC.isNullAt(1))
-          Packing(useLong = false, radix, 0)
-        else {
-          val dim = math.max(rowS.getInt(0), rowC.getInt(0))
-          val span = BigInt(rowS.getLong(1)) + BigInt(rowC.getLong(1))
-          val bound = BigInt(dim) * span.pow(2) * radix + k
-          Packing(bound < BigInt(Long.MaxValue), radix, dim)
-        }
+          Packing.decimal(k)
+        else Packing(k, math.max(rowS.getInt(0), rowC.getInt(0)),
+          BigInt(rowS.getLong(1)) + BigInt(rowC.getLong(1)))
     }
-    val dist = VecSqDist.vecSqDistLong(col("xs"), col("cs"))
-    val (packed, unpack) =
-      if (p.useLong)
-        (dist * lit(p.radix) + col("cid"),
-          (c: org.apache.spark.sql.Column) => c % p.radix)
-      else
-        (dist.cast("decimal(20,0)") * lit(TieRadix) + col("cid"),
-          (c: org.apache.spark.sql.Column) => c % TieRadix)
     scaled.join(broadcast(cents), Seq(groupCol))
-      .withColumn("packed", packed)
+      .withColumn("packed", p.packed(VecSqDist.vecSqDistLong(col("xs"), col("cs"))))
       .groupBy(col(groupCol), col("id"))
       .agg(min(col("packed")).as("p"))
       .select(col(groupCol), col("id"),
-        unpack(col("p")).cast("long").as("cluster"))
+        p.unpack(col("p")).cast("long").as("cluster"))
   }
 
   /** `iters` rounds of [assign → recompute centroids], then a final
@@ -244,6 +247,8 @@ object KMeans {
       envelopeHint: Option[(Int, Long, Long)] = None): (DataFrame, DataFrame) = {
     require(k > 0 && iters >= 0, s"need k > 0, iters >= 0; got $k, $iters")
     require(k < TieRadix, s"k must be < $TieRadix for the argmin packing")
+    // a hint is checked before anything is cached
+    val hinted = envelopeHint.map(Packing.hinted(k, _))
     def scaledG(df: DataFrame): DataFrame =
       df.select(col(groupCol), col(idCol).cast("long").as("id"),
         expr(s"transform($vecCol, v -> CAST(round(CAST(v AS DOUBLE) * $scale.0) AS BIGINT))")
@@ -261,15 +266,7 @@ object KMeans {
     // statically ([[assignGroupedFrozen]]'s contract: valid whenever the
     // caller can prove |component| bounds for rows AND centroids — e.g.
     // unit-normalized slices) and skips the per-call driver stats scan.
-    val p = envelopeHint match {
-      case Some((dim, spanEmb, spanCent)) =>
-        val radix =
-          math.max(java.lang.Long.highestOneBit(math.max(k - 1, 1)) * 2, 2L)
-        val span = BigInt(spanEmb) + BigInt(spanCent)
-        val bound = BigInt(dim) * span.pow(2) * radix + k
-        Packing(bound < BigInt(Long.MaxValue), radix, dim)
-      case None => packing(scaled, k)
-    }
+    val p = hinted.getOrElse(packing(scaled, k))
     val seedW = Window.partitionBy(col(groupCol)).orderBy(col("id"))
     var centroids = scaledTrain
       .withColumn("rn", row_number().over(seedW)).filter(col("rn") <= k)
@@ -277,22 +274,13 @@ object KMeans {
         col("xs").as("cs"))
     var prevCkpt: Option[DataFrame] = None
 
-    def assignG(sc: DataFrame, cents: DataFrame): DataFrame = {
-      val dist = VecSqDist.vecSqDistLong(col("xs"), col("cs"))
-      val (packed, unpack) =
-        if (p.useLong)
-          (dist * lit(p.radix) + col("cid"),
-            (c: org.apache.spark.sql.Column) => c % p.radix)
-        else
-          (dist.cast("decimal(20,0)") * lit(TieRadix) + col("cid"),
-            (c: org.apache.spark.sql.Column) => c % TieRadix)
+    def assignG(sc: DataFrame, cents: DataFrame): DataFrame =
       sc.join(broadcast(cents), Seq(groupCol))
-        .withColumn("packed", packed)
+        .withColumn("packed", p.packed(VecSqDist.vecSqDistLong(col("xs"), col("cs"))))
         .groupBy(col(groupCol), col("id"))
         .agg(min(col("packed")).as("p"))
         .select(col(groupCol), col("id"),
-          unpack(col("p")).cast("long").as("cid"))
-    }
+          p.unpack(col("p")).cast("long").as("cid"))
 
     for (i <- 0 until iters) {
       val a = scaledTrain

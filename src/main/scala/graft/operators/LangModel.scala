@@ -38,18 +38,7 @@ import org.apache.spark.sql.functions._
   */
 object LangModel {
 
-  /** Eagerly materialize the (doc-grain) scorer result, then release the
-    * bounded vocab/model caches it was built from — the Dedup.finalized
-    * discipline: CacheManager holds persisted plans until explicit
-    * unpersist, so a long-lived session calling the scorers repeatedly
-    * would otherwise accumulate caches without bound. The returned frame
-    * stays persisted: it is the operator's output. */
-  private def finalized(result: DataFrame, cached: DataFrame*): DataFrame = {
-    val out = result.persist()
-    out.count()
-    cached.foreach(_.unpersist(false))
-    out
-  }
+  import Checkpoints.finalized
 
   private def toks(docs: DataFrame, idCol: String, textCol: String) =
     docs.select(col(idCol).as("doc"), split(col(textCol), " ").as("tk"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.queries.Tables.spread
 
 /** Record linkage (entity resolution): find pairs of records that refer to
   * the same real-world entity despite textual drift in their names/keys.
@@ -25,20 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Linkage {
 
-  /** Round-robin an under-partitioned input up to the configured shuffle
-    * parallelism (the QueryDef.spread discipline at operator level): a
-    * small-file scan delivers ONE split, and because the blocked pair
-    * join broadcasts the build side at these sizes, the WHOLE pair
-    * expansion + per-pair scorer would run serial inside that single
-    * scan task (measured: one 2.9 s task carrying all of q84's
-    * levenshtein pairs). Already-parallel inputs pass through, so
-    * cluster-scale scans never pay the exchange. */
-  private def spreadSmallScan(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (df.rdd.getNumPartitions >= math.max(2, target / 2)) df
-    else df.repartition(target)
-  }
-
   /** Candidate pairs from `df` sharing `blockKey` with
     * `levenshtein(name_a, name_b) <= maxDist`, `id_a < id_b`.
     * Output: (id_a, id_b, dist). Levenshtein is Spark's codegen'd native
@@ -56,7 +43,11 @@ object Linkage {
           .filter(col("bn") <= cap).drop("bn")
       case None => proj0
     }
-    val a = spreadSmallScan(proj.select(col("id").as("id_a"),
+    // the blocked pair join broadcasts the build side at these sizes, so
+    // on a one-split scan the WHOLE pair expansion + scorer would run in
+    // that single task (measured: one 2.9 s task carrying all of q84's
+    // levenshtein pairs) — spread the probe side
+    val a = spread(proj.select(col("id").as("id_a"),
       col("name").as("name_a"), col("block")))
     val b = proj.select(col("id").as("id_b"), col("name").as("name_b"),
       col("block"))
@@ -88,7 +79,7 @@ object Linkage {
           .filter(col("bn") <= cap).drop("bn")
       case None => proj0
     }
-    val a = spreadSmallScan(proj.select(col("id").as("id_a"),
+    val a = spread(proj.select(col("id").as("id_a"),
       col("name").as("name_a"), col("block")))
     val b = proj.select(col("id").as("id_b"), col("name").as("name_b"),
       col("block"))

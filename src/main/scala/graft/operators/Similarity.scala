@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorExprs._
 import graft.functions.VecDot.vecDot
+import graft.queries.Tables.spread
 
 /** Approximate-nearest-neighbor search over an `array<float>` embedding
   * column.
@@ -25,27 +26,7 @@ import graft.functions.VecDot.vecDot
   */
 object Similarity {
 
-  /** Materialize the (small) result, then release intermediate caches —
-    * see [[Dedup]] for rationale. */
-  private def finalized(result: DataFrame, cached: DataFrame*): DataFrame = {
-    val out = result.persist()
-    out.count()
-    cached.foreach(_.unpersist(false))
-    out
-  }
-
-  /** Round-robin an under-partitioned input up to the configured shuffle
-    * parallelism (the QueryDef.spread discipline, at operator level): a
-    * small-file scan delivers ONE split, so every per-row-expensive stage
-    * computed on top of it (bucket HOFs, pairwise scoring) runs serial.
-    * The exchange moves each row once — strictly dominated by the per-row
-    * work these call sites feed — and already-parallel inputs pass
-    * through untouched, so cluster-scale scans never pay it. */
-  private def spreadSmallScan(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (df.rdd.getNumPartitions >= math.max(2, target / 2)) df
-    else df.repartition(target)
-  }
+  import Checkpoints.finalized
 
   /** Exact top-k: for each row of `queries`, the k nearest corpus rows by
     * cosine (excluding self-matches by id), ranked desc with id tiebreak.
@@ -65,7 +46,7 @@ object Similarity {
     // 3.9 s in that single task). Spread an under-partitioned query side
     // to the configured shuffle parallelism; the exchange moves |queries|
     // rows once, strictly dominated by the pairwise compute at any scale.
-    val q = if (broadcastCorpus) spreadSmallScan(q0) else q0
+    val q = if (broadcastCorpus) spread(q0) else q0
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       sqrt(vecDot(col(vecCol), col(vecCol))).as("cn"))
     val w = Window.partitionBy(col("query_id"))
@@ -157,7 +138,8 @@ object Similarity {
         math.min(24, math.max(4,
           math.ceil(math.log(n.toDouble / 64) / math.log(2)).toInt))
       }
-    val e = spreadSmallScan(
+    // spread: the bucket HOFs and pairwise scoring are per-row expensive
+    val e = spread(
       emb.select(col(idCol).as("id"), col(vecCol).as("v"),
         sqrt(vecDot(col(vecCol), col(vecCol))).as("nrm")))
     // persist: bucket ids are consumed by `tables` self-joins, and the
@@ -432,7 +414,7 @@ object Similarity {
         math.min(24, math.max(2,
           math.ceil(math.log(n.toDouble / 64) / math.log(2)).toInt))
       }
-    val e = spreadSmallScan(
+    val e = spread(
       emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"),
         sqrt(vecDot(col(vecCol), col(vecCol))).as("nrm")))
     // persist: band ids feed `tables` self-joins plus two verify joins
@@ -984,6 +966,10 @@ object Similarity {
       scale: Long = 1000000L, trainMaxRows: Long = 0L,
       trainOn: DataFrame = null,
       statsHint: Option[(Int, Long)] = None): Unit = {
+    statsHint.foreach { case (dim, nRows) =>
+      require(dim > 0 && nRows > 0,
+        s"buildPqIndex: statsHint needs dim > 0 and rows > 0; got ($dim, $nRows)")
+    }
     val spark = emb.sparkSession
     val corpus = emb.select(col(idCol), col(vecCol)).persist()
     // (dim, rowCount): from the caller when it already paid the stats scan

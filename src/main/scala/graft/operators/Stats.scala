@@ -12,19 +12,11 @@ import org.apache.spark.sql.functions._
   */
 object Stats {
 
-  /** Eagerly materialize an operator result, then release the cached
-    * inputs it was built from (the Dedup.finalized discipline) — the
-    * GlobalRank consumers below cache their AGGREGATE inputs because the
-    * sharded rank machinery scans its input three times (quantile sketch,
-    * shard counts, the windows); without the cache each scan re-runs the
-    * upstream shuffle. The returned frame stays persisted: it is the
-    * operator's output (1-row stats or value/entity-grain tables). */
-  private def finalized(result: DataFrame, cached: DataFrame*): DataFrame = {
-    val out = result.persist()
-    out.count()
-    cached.foreach(_.unpersist(false))
-    out
-  }
+  // The GlobalRank consumers below cache their AGGREGATE inputs, because
+  // the sharded rank machinery scans its input three times (quantile
+  // sketch, shard counts, the windows); without the cache each scan
+  // re-runs the upstream shuffle. `finalized` releases those caches.
+  import Checkpoints.finalized
 
   /** Per-group ordinary-least-squares trend of `yCol` (integerized at
     * `yScale`) against integer `xCol`:

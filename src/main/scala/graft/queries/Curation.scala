@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.withConf
 import graft.functions.{HashExprs => H, VectorExprs => V}
 import graft.operators.{Classifier, Linkage, Ranking, Similarity, TimeSeries}
 
@@ -412,11 +413,12 @@ object Curation {
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      ScaleOps.withAqeOff(s) { ScaleOps.withShufflePartitions(s, 8) {
+      withConf(s, "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "8") {
         graft.operators.Graph.labelPropagation(edges, iters = 2,
           broadcastLabels = true)
           .select(col("id").as("node"), col("community"))
-      } }
+      }
     }, Some("""
       WITH fwd AS (SELECT DISTINCT l_partkey AS src,
                      l_suppkey + 10000000 AS dst FROM lineitem),
@@ -752,7 +754,8 @@ object Curation {
     // top-10. AQE-off/8-partition scope — the iterative index build is
     // ~100 small sequential jobs (the sim_ivfpq measurement).
     Q("sim_pq_index", (s, d) =>
-      ScaleOps.withAqeOff(s) { ScaleOps.withShufflePartitions(s, 8) {
+      withConf(s, "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "8") {
         val dir = java.nio.file.Files.createTempDirectory("pq-index")
         dir.toFile.deleteOnExit()
         val e = t(s, d, "embeddings")
@@ -760,7 +763,7 @@ object Curation {
         Similarity.queryPqIndex(s, dir.toString,
           e.filter(col("vec_id") % 10 === 0), "vec_id", "embedding",
           k = 10)
-      } }, Some(pqIndexOracle("TRUE"))),
+      }, Some(pqIndexOracle("TRUE"))),
 
     // PQ index APPEND lifecycle: codebooks are the frozen quantizer
     // contract (the sim_ivf_append discipline) — the build slice carries
@@ -770,7 +773,8 @@ object Curation {
     // that slice: the oracle trains its Lloyd CTEs on id < 1000 and
     // assigns codes corpus-wide.
     Q("sim_pq_append", (s, d) =>
-      ScaleOps.withAqeOff(s) { ScaleOps.withShufflePartitions(s, 8) {
+      withConf(s, "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "8") {
         val dir = java.nio.file.Files.createTempDirectory("pq-append")
         dir.toFile.deleteOnExit()
         val e = t(s, d, "embeddings")
@@ -785,7 +789,7 @@ object Curation {
         Similarity.queryPqIndex(s, dir.toString,
           e.filter(col("vec_id") % 10 === 0), "vec_id", "embedding",
           k = 10)
-      } }, Some(pqIndexOracle("id < 1000"))),
+      }, Some(pqIndexOracle("id < 1000"))),
 
     // ---- hybrid retrieval: reciprocal-rank fusion --------------------
     // lexical (whole-query BM25, top 50) + semantic (cosine to a fixed

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.GraftSession.withConf
 import graft.operators.{Dedup, Similarity, TextAnalysis}
 import graft.functions.{HashExprs => H, VectorExprs => V}
 
@@ -454,7 +455,7 @@ object Extensions {
     // nested-transform pair explode — default AQE coalescing folded it
     // to 3 tasks (measured 0.7-1.9 s stage)
     Q("text_overlap_matrix", (s, d) =>
-      ScaleOps.withAdvisoryPartitionSize(s, 4L << 20) {
+      withConf(s, "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (4L << 20).toString) {
         Dedup.sourceOverlap(Tables.ts(s, d, "documents"), "text", "source")
       },
       Some(s"""
@@ -512,10 +513,11 @@ object Extensions {
     // AQE-off/8-partition scope (the sim_ivfpq measurement): 8 banded
     // bucket joins over 2k vectors are all small fixed-shape stages
     Q("dedup_embed_lsh", (s, d) =>
-      ScaleOps.withAqeOff(s) { ScaleOps.withShufflePartitions(s, 8) {
+      withConf(s, "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "8") {
         Similarity.cosineNearDupsLsh(t(s, d, "embeddings"), "vec_id",
           "embedding", 0.45, numPlanes = 2, tables = 8)
-      } },
+      },
       Some(lshPairsOracle)),
 
     // semantic-dedup E2E on the subquadratic path: LSH pairs feed the
@@ -527,14 +529,15 @@ object Extensions {
     // kernel inside this benched entry. The oracle closes the SAME
     // deterministic LSH pair graph with a recursive CTE.
     Q("dedup_embed_clusters_lsh", (s, d) =>
-      ScaleOps.withAqeOff(s) { ScaleOps.withShufflePartitions(s, 8) {
+      withConf(s, "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "8") {
         val e = t(s, d, "embeddings")
         Dedup.connectedComponents(e.select(col("vec_id").as("id")),
             Similarity.cosineNearDupsLsh(e, "vec_id", "embedding", 0.45,
               numPlanes = 2, tables = 8))
           .select(col("id"), col("cluster"),
             (col("id") === col("cluster")).as("is_kept"))
-      } }, Some(s"""
+      }, Some(s"""
       WITH RECURSIVE $lshPairsCte,
       edges AS (SELECT id_a AS src, id_b AS dst FROM lshp
                 UNION ALL SELECT id_b, id_a FROM lshp),
@@ -619,11 +622,12 @@ object Extensions {
     // measured warm 6.9 s @ 32/AQE -> 3.8 s @ 8/no-AQE. The operator
     // materializes internally, so the scope covers every real job.
     Q("sim_ivfpq", (s, d) =>
-      ScaleOps.withAqeOff(s) { ScaleOps.withShufflePartitions(s, 8) {
+      withConf(s, "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "8") {
         val e = t(s, d, "embeddings")
         Similarity.ivfPqRerankTopK(e.filter(col("vec_id") % 10 === 0), e,
           "vec_id", "embedding", 10, candidates = 100, nCells = 8, nprobe = 6)
-      } }, Some(ivfPqOracle)),
+      }, Some(ivfPqOracle)),
 
     // kNN weak labeling: each query takes the majority label of its 3
     // nearest neighbors (ties: most votes, then smallest label) — the
@@ -893,7 +897,7 @@ object Extensions {
     Q("text_scrub_boilerplate", (s, d) =>
       // 4 MB advisory: byte-light gram exchanges under CPU-dense span
       // reassembly coalesced to 1 task (measured 0.5-0.8 s stage)
-      ScaleOps.withAdvisoryPartitionSize(s, 4L << 20) {
+      withConf(s, "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (4L << 20).toString) {
         TextAnalysis.scrubBoilerplateSpans(Tables.ts(s, d, "documents"),
           "doc_id", "text", spanLen = 3, maxDf = 3)
       },

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.withConf
 import graft.operators.{Bpe, Diff, EventAnalytics, Graph, Sampling, Stats,
   TimeSeries}
 
@@ -280,14 +281,12 @@ object Pipeline {
       // partition per micro-batch; at this volume store open/commit is
       // the fixed cost (the q55 lesson) — scoped to stream start and
       // restored
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = try {
+      val q = withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         graft.streaming.WindowedAgg
           .tumblingDistinct(ev, "ts", "user_id", "6 hours", "1 hour")
           .writeStream.format("memory").queryName("q109_stream")
           .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
+      }
       q.awaitTermination()
       s.table("q109_stream")
     }, Some("""
@@ -508,10 +507,9 @@ object Pipeline {
       // z-keyed exchange is byte-LIGHT but generates the x<y expansion on
       // top of it — default coalescing folded it to ONE task (measured
       // 1.3 s serial stage). Merge-only, a no-op at scale.
-      ScaleOps.withAdvisoryPartitionSize(s, 4L << 20) {
-        ScaleOps.withShufflePartitions(s, 8) {
-          Graph.adamicAdar(pp, maxDegree = None, topK = 50)
-        }
+      withConf(s, "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (4L << 20).toString,
+          "spark.sql.shuffle.partitions" -> "8") {
+        Graph.adamicAdar(pp, maxDegree = None, topK = 50)
       }
     }, Some("""
       WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem
@@ -834,9 +832,10 @@ object Pipeline {
           struct(col("u").as("src"), col("v").as("dst")),
           struct(col("v").as("src"), col("u").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      ScaleOps.withAqeOff(s) { ScaleOps.withShufflePartitions(s, 8) {
+      withConf(s, "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "8") {
         Graph.kCore(edges, k = 16, rounds = 2)
-      } }
+      }
     }, Some("""
       WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem
                   WHERE l_partkey % 5 = 0),

@@ -22,8 +22,8 @@ object Tables {
   /** `events` with `ts` normalized to a microsecond timestamp. Parquet
     * written by different tools lands differently in Spark: TIMESTAMP(NANOS)
     * reads as a nanos-since-epoch long (under
-    * `spark.sql.legacy.parquet.nanosAsLong=true`, set by all our session
-    * builders), while pyarrow/pandas `timestamp[us]` (no timezone) reads as
+    * `spark.sql.legacy.parquet.nanosAsLong=true`, which [[graft.GraftSession]]
+    * sets), while pyarrow/pandas `timestamp[us]` (no timezone) reads as
     * TIMESTAMP_NTZ. A real ingest sees all of these on day one, so the
     * engine accepts them all here. DuckDB oracles must
     * `CAST(ts AS TIMESTAMP)` for the same value.
@@ -38,7 +38,7 @@ object Tables {
     * frames qualify too, which is why it takes a DataFrame rather than a
     * path. `ts div 1000` keeps integer precision for the nanos case (a
     * double division would lose sub-second bits past 2^53); the NTZ cast is
-    * value-preserving because every session builder pins the session
+    * value-preserving because [[graft.GraftSession]] pins the session
     * timezone to UTC. */
   def normalizeEventTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._

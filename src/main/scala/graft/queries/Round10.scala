@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.withConf
 import graft.operators.{Graph, IncrementalAgg, Sampling, Stats, TextAnalysis,
   TimeSeries}
 
@@ -435,9 +436,10 @@ object Round10 {
         o.join(li, o("o_orderkey") === li("l_orderkey"))
           .select(col("o_custkey").as("src"),
             (col("l_suppkey") + 10000000L).as("dst"))).distinct()
-      ScaleOps.withAqeOff(s) { ScaleOps.withShufflePartitions(s, 8) {
+      withConf(s, "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "8") {
         Graph.hits(edges, iters = 2, edgesDistinct = true)
-      } }
+      }
     }, Some {
       val iterCtes = (1 to 2).map { i =>
         s"""ar$i AS (SELECT e.dst AS id, CAST(sum(h.h) AS BIGINT) AS a
@@ -475,11 +477,12 @@ object Round10 {
     // both engines merge collisions identically); ranks replay q53's
     // integer rounds, terms map back by min-word per hash, top 10.
     Q("text_textrank", (s, d) =>
-      ScaleOps.withAqeOff(s) { ScaleOps.withShufflePartitions(s, 8) {
+      withConf(s, "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "8") {
         graft.operators.Ranking.textrankKeywords(
           Tables.ts(s, d, "documents"), "doc_id", "text",
           iters = 2, topN = 10)
-      } },
+      },
       Some {
         import graft.functions.HashExprs
         val iterCtes = (1 to 2).map { i =>

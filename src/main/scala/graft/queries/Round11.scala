@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.withConf
 import graft.functions.{VectorExprs => V}
 import graft.operators.{FeatureEng, Similarity, Stats, TextAnalysis,
   TimeSeries}
@@ -59,7 +60,7 @@ object Round11 {
     // AQE coalescing serialized the closing moment aggregate into one
     // task (~2.7 s of the entry). Merge-only semantics — a no-op at scale.
     Q("q140_spearman", (s, d) =>
-      ScaleOps.withAdvisoryPartitionSize(s, 4L << 20) {
+      withConf(s, "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (4L << 20).toString) {
         Stats.spearman(t(s, d, "lineitem"), "l_quantity", "l_extendedprice",
           xScale = 1.0, yScale = 100.0)
       },

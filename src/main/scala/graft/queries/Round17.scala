@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.GraftSession.withConf
 import graft.operators.{CompandedWav, EvalText, Similarity, Wordpiece}
 
 /** Round-17 queries:
@@ -230,7 +231,8 @@ object Round17 {
     // replays the entire pipeline — the eigen loop as a 64-step recursive
     // CTE, then the sim_pq_index Lloyd/ADC tail over rotated vectors.
     Q("sim_opq_index", (s, d) =>
-      ScaleOps.withAqeOff(s) { ScaleOps.withShufflePartitions(s, 8) {
+      withConf(s, "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "8") {
         val dir = java.nio.file.Files.createTempDirectory("opq-index")
         dir.toFile.deleteOnExit()
         val e = Tables.t(s, d, "embeddings")
@@ -238,7 +240,7 @@ object Round17 {
         Similarity.queryOpqIndex(s, dir.toString,
           e.filter(col("vec_id") % 10 === 0), "vec_id", "embedding",
           k = 10)
-      } },
+      },
       Some(Curation.pqIndexOracle("TRUE", "SELECT id, v FROM rote",
         opqPreCtes()))),
 
@@ -250,7 +252,8 @@ object Round17 {
     // pinned-train build (the sim_pq_append discipline, rotation
     // included).
     Q("sim_opq_append", (s, d) =>
-      ScaleOps.withAqeOff(s) { ScaleOps.withShufflePartitions(s, 8) {
+      withConf(s, "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "8") {
         val dir = java.nio.file.Files.createTempDirectory("opq-append")
         dir.toFile.deleteOnExit()
         val e = Tables.t(s, d, "embeddings")
@@ -265,7 +268,7 @@ object Round17 {
         Similarity.queryOpqIndex(s, dir.toString,
           e.filter(col("vec_id") % 10 === 0), "vec_id", "embedding",
           k = 10)
-      } },
+      },
       Some(Curation.pqIndexOracle("id < 1000", "SELECT id, v FROM rote",
         opqPreCtes("id < 1000")))),
 
@@ -291,7 +294,7 @@ object Round17 {
     // 1-3 tasks (measured ~2.5 s single-task stages). No-op at scale —
     // coalescing only merges below-advisory partitions, never splits.
     Q("text_chrf", (s, d) =>
-      ScaleOps.withAdvisoryPartitionSize(s, 4L << 20) {
+      withConf(s, "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (4L << 20).toString) {
         EvalText.chrF(Round15.evalPairs(s, d), "id", "cand", "ref")
       },
       Some(EvalText.chrfOracleSql(Round15.evalPairsCte)))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.withConf
 import graft.functions.{SketchExprs, ZOrderExprs, VectorExprs => V}
 import graft.operators.{BloomPrune, Dedup, Graph, IntervalJoin, KMeans,
   LangModel, Ranking, Similarity, Sketches}
@@ -23,53 +24,6 @@ object ScaleOps {
       try walk.sorted(java.util.Comparator.reverseOrder[Path]())
         .forEach(p => Files.deleteIfExists(p))
       finally walk.close()
-    }
-  }
-
-  /** Scope `spark.sql.adaptive.enabled=false` around an eagerly-
-    * materializing operator call (the q55 partitions-scoping pattern):
-    * iterative loops whose stages are all small and fixed-shape pay AQE's
-    * per-stage replanning as pure latency. The conf is restored before
-    * returning, so only the operator's internal jobs run without AQE. */
-  private[graft] def withAqeOff[T](s: org.apache.spark.sql.SparkSession)(f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val before = s.conf.get(key)
-    s.conf.set(key, "false")
-    try f finally s.conf.set(key, before)
-  }
-
-  /** Scope `spark.sql.shuffle.partitions` around an eagerly-materializing
-    * operator call (q55/q74's store-scoping pattern, generalized): an
-    * iterative loop over a SMALL shuffled dataset pays per-task scheduling
-    * on every round, so the right parallelism is sized to the data, not
-    * the session default — exactly what a tuned job does per-stage on a
-    * real cluster. Restored before returning. */
-  private[graft] def withShufflePartitions[T](s: org.apache.spark.sql.SparkSession,
-      n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val before = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try f finally s.conf.set(key, before)
-  }
-
-  /** Scope `spark.sql.adaptive.advisoryPartitionSizeInBytes` around an
-    * eagerly-materializing operator call: AQE sizes post-shuffle
-    * partitions by BYTES, so a CPU-dense, byte-light exchange (short
-    * gram/count rows that each cost real per-row work downstream) gets
-    * coalesced to one or two tasks and the expensive stage runs serial.
-    * A smaller advisory tells AQE this stage's rows are compute-bound —
-    * the per-stage sizing a tuned cluster job sets anyway. Scale-safe by
-    * construction: coalescing only ever MERGES below-advisory partitions
-    * (never splits), so on big-data stages whose partitions already
-    * exceed the advisory this is a no-op. Restored before returning. */
-  private[graft] def withAdvisoryPartitionSize[T](
-      s: org.apache.spark.sql.SparkSession, bytes: Long)(f: => T): T = {
-    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val before = s.conf.getOption(key)
-    s.conf.set(key, bytes.toString)
-    try f finally before match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
 
@@ -203,16 +157,14 @@ object ScaleOps {
       val ev = Tables.eventsStream(s, d)
       // one state store per shuffle partition: 4 matches the shard count
       // (same store-open-vs-throughput trade measured for q55)
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val q = graft.streaming.StreamingSketch
           .heavyHitters(ev, "event_type", shards = 4, capacity = 32)
           .toDF()
           .writeStream.format("memory").queryName("q74_stream")
           .outputMode("update").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
+      }
       graft.streaming.StreamingSketch.finalTopK(s.table("q74_stream"), 3)
     }, Some("""
       SELECT event_type AS item, count(*) AS est_count
@@ -231,16 +183,14 @@ object ScaleOps {
       val ev = Tables.eventsStream(s, d)
       // one state store per shuffle partition (q74's trade): user
       // cardinality per store stays bounded at 8 stores
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = graft.streaming.StreamingFunnel
           .funnel(ev, "user_id", "ts", "event_type", steps)
           .toDF()
           .writeStream.format("memory").queryName("q81_stream")
           .outputMode("update").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
+      }
       graft.streaming.StreamingFunnel.stepCounts(s.table("q81_stream"), steps)
     }, Some(Coverage.funnelOracleSql(None))),
 
@@ -443,11 +393,12 @@ object ScaleOps {
       // latency here (round-8 probe: ~0.4-0.7 s of the entry); pageRank
       // materializes internally (checkpoint-backed result), so the scope
       // covers every real job and the conf is restored before return
-      withAqeOff(s) { withShufflePartitions(s, 8) {
+      withConf(s, "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "8") {
         Graph.pageRank(edges, iters = 3, edgesDistinct = true,
             broadcastRank = true)
           .select(col("id").as("node"), col("rank").as("rank_scaled"))
-      } }
+      }
     }, Some {
       // DuckDB sums BIGINT into HUGEINT — cast every aggregate/derived rank
       // back to BIGINT so the compare sees the same integer type Spark emits
@@ -492,11 +443,12 @@ object ScaleOps {
       // Shuffle parallelism sized to the ~52k-edge graph (8 partitions):
       // with AQE off nothing coalesces the session's 32, and the 3-round
       // loop pays every empty task's scheduling each round
-      withAqeOff(s) { withShufflePartitions(s, 8) {
+      withConf(s, "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "8") {
         Graph.pageRank(edges, iters = 3, edgesDistinct = true,
             broadcastRank = true, danglingMass = true)
           .select(col("id").as("node"), col("rank").as("rank_scaled"))
-      } }
+      }
     }, Some {
       val iterCtes = (1 to 3).map { i =>
         s"""c$i AS (SELECT e.dst AS id, CAST(sum(r.rank // d.outdeg) AS BIGINT) AS m
@@ -669,14 +621,12 @@ object ScaleOps {
       // not row throughput (measured r6: 8 stores 2.9 s, 4 → 2.1 s, 2 →
       // 1.9 s warm) — 4 balances that against skew headroom; scoped to
       // this query and restored, since the setting binds at stream start
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val q = joined.select(col("a_id"), col("b_id"), col("a_user").as("user_id"))
           .writeStream.format("memory").queryName("q55_stream")
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
+      }
       s.table("q55_stream")
     }, Some("""
       WITH a AS (SELECT event_id AS a_id, user_id, CAST(ts AS TIMESTAMP) AS a_ts
@@ -705,15 +655,13 @@ object ScaleOps {
       val joined = graft.streaming.StreamingDedup.intervalJoinLeft(
         side("a", 0), side("b", 1), "a_user", "b_user", "a_ts", "b_ts",
         lateness = "1 hour", bound = "30 minutes")
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val q = joined
           .select(col("a_id"), col("b_id"), col("a_user").as("user_id"))
           .writeStream.format("memory").queryName("q71_stream")
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
+      }
       s.table("q71_stream")
     }, Some("""
       WITH a AS (SELECT event_id AS a_id, user_id, CAST(ts AS TIMESTAMP) AS a_ts
@@ -750,15 +698,13 @@ object ScaleOps {
       val joined = graft.streaming.StreamingDedup.intervalJoinFull(
         side("a", 0), side("b", 1), "a_user", "b_user", "a_ts", "b_ts",
         lateness = "1 hour", bound = "30 minutes")
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val q = joined.select(col("a_id"), col("b_id"),
             coalesce(col("a_user"), col("b_user")).as("user_id"))
           .writeStream.format("memory").queryName("q72_stream")
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
+      }
       s.table("q72_stream")
     }, Some("""
       WITH a AS (SELECT event_id AS a_id, user_id, CAST(ts AS TIMESTAMP) AS a_ts

@@ -42,15 +42,8 @@ object StateStores {
     * previous setting afterwards. Scope it around query START (for
     * `AvailableNow`/`processAllAvailable` runs, around the whole run):
     * queries already running keep the provider they started with. */
-  def withProvider[T](spark: SparkSession, provider: String)(body: => T): T = {
-    val before = spark.conf.getOption(ProviderConf)
-    spark.conf.set(ProviderConf, provider)
-    try body
-    finally before match {
-      case Some(v) => spark.conf.set(ProviderConf, v)
-      case None => spark.conf.unset(ProviderConf)
-    }
-  }
+  def withProvider[T](spark: SparkSession, provider: String)(body: => T): T =
+    graft.GraftSession.withConf(spark, ProviderConf -> provider)(body)
 
   /** [[withProvider]] pinned to RocksDB — the high-cardinality path. */
   def withRocksDB[T](spark: SparkSession)(body: => T): T =

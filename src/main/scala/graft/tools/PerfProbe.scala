@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.GraftSession.withConf
 
 /** Dev-only measurement probe: times/validates operator building blocks in
   * isolation so optimization targets the measured bottleneck, not a
@@ -13,17 +14,7 @@ object PerfProbe {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("lshrecall")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-perfprobe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.getOrCreate("graft-perfprobe")
 
     mode match {
       case "lshrecall" =>
@@ -230,7 +221,7 @@ object PerfProbe {
         // AQE-off/8-partition scope was inherited from the k-core entry,
         // but the wedge join is a much bigger intermediate
         import graft.operators.Graph
-        import graft.queries.{ScaleOps, Tables}
+        import graft.queries.Tables
         val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
           .filter(col("l_partkey") % 5 === 0)
           .select(col("l_orderkey"), col("l_partkey"))
@@ -248,13 +239,13 @@ object PerfProbe {
           }
           println(f"[probe] aa/$tag reps=${reps.map(r => f"$r%.2f").mkString(",")}")
         }
-        run("aqeoff8")(ScaleOps.withAqeOff(spark) {
-          ScaleOps.withShufflePartitions(spark, 8) {
-            Graph.adamicAdar(pp, None, 50) } })
-        run("aqeon32")(Graph.adamicAdar(pp, None, 50))
-        run("aqeon8")(ScaleOps.withShufflePartitions(spark, 8) {
+        run("aqeoff8")(withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+            "spark.sql.shuffle.partitions" -> "8") {
           Graph.adamicAdar(pp, None, 50) })
-        run("aqeoff32")(ScaleOps.withAqeOff(spark) {
+        run("aqeon32")(Graph.adamicAdar(pp, None, 50))
+        run("aqeon8")(withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+          Graph.adamicAdar(pp, None, 50) })
+        run("aqeoff32")(withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
           Graph.adamicAdar(pp, None, 50) })
       case "decon" =>
         // A/B the text_decontaminate input layout vs the r5 record shape:
@@ -383,7 +374,6 @@ object PerfProbe {
         // phase-level timing of the sim_opq_append lifecycle (build /
         // append x2 / query), plus the build's internal split
         import graft.operators.Similarity
-        import graft.queries.ScaleOps
         def time[A](label: String)(body: => A): A = {
           val t0 = System.nanoTime(); val r = body
           println(f"[probe] $label ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
@@ -391,35 +381,34 @@ object PerfProbe {
         val e0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
         (1 to 2).foreach { rep =>
           println(s"[probe] --- rep $rep")
-          ScaleOps.withAqeOff(spark) {
-            ScaleOps.withShufflePartitions(spark, 8) {
-              val dir = java.nio.file.Files.createTempDirectory("opq-probe")
-              dir.toFile.deleteOnExit()
-              time("rotation only") {
-                Similarity.opqRotation(
-                  e0.filter(col("vec_id") < 1000).select(col("embedding")),
-                  "embedding", 64)
-              }
-              time("buildOpqIndex") {
-                Similarity.buildOpqIndex(e0.filter(col("vec_id") < 1000),
-                  "vec_id", "embedding", dir.toString)
-              }
-              time("appendOpqIndex A") {
-                Similarity.appendOpqIndex(
-                  e0.filter(col("vec_id") >= 1000 && col("vec_id") % 2 === 0),
-                  "vec_id", "embedding", dir.toString)
-              }
-              time("appendOpqIndex B") {
-                Similarity.appendOpqIndex(
-                  e0.filter(col("vec_id") >= 1000 && col("vec_id") % 2 === 1),
-                  "vec_id", "embedding", dir.toString)
-              }
-              time("queryOpqIndex") {
-                Similarity.queryOpqIndex(spark, dir.toString,
-                  e0.filter(col("vec_id") % 10 === 0), "vec_id", "embedding",
-                  k = 10)
-                  .write.format("noop").mode("overwrite").save()
-              }
+          withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+              "spark.sql.shuffle.partitions" -> "8") {
+            val dir = java.nio.file.Files.createTempDirectory("opq-probe")
+            dir.toFile.deleteOnExit()
+            time("rotation only") {
+              Similarity.opqRotation(
+                e0.filter(col("vec_id") < 1000).select(col("embedding")),
+                "embedding", 64)
+            }
+            time("buildOpqIndex") {
+              Similarity.buildOpqIndex(e0.filter(col("vec_id") < 1000),
+                "vec_id", "embedding", dir.toString)
+            }
+            time("appendOpqIndex A") {
+              Similarity.appendOpqIndex(
+                e0.filter(col("vec_id") >= 1000 && col("vec_id") % 2 === 0),
+                "vec_id", "embedding", dir.toString)
+            }
+            time("appendOpqIndex B") {
+              Similarity.appendOpqIndex(
+                e0.filter(col("vec_id") >= 1000 && col("vec_id") % 2 === 1),
+                "vec_id", "embedding", dir.toString)
+            }
+            time("queryOpqIndex") {
+              Similarity.queryOpqIndex(spark, dir.toString,
+                e0.filter(col("vec_id") % 10 === 0), "vec_id", "embedding",
+                k = 10)
+                .write.format("noop").mode("overwrite").save()
             }
           }
           spark.catalog.clearCache()

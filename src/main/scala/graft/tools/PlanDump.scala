@@ -1,27 +1,17 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` of named declared queries to files — the
   * plan evidence the optimization rounds commit under `plans/rNN/`.
   * Run: `sbt "runMain graft.tools.PlanDump <sfdir> <outdir> <suffix> q1,q2"`.
-  * Writes `<outdir>/<name>_<suffix>.txt`. Bench-scope confs (local[32],
-  * shuffle=32, AQE on) so the dumped plan matches what the bench executes.
+  * Writes `<outdir>/<name>_<suffix>.txt`. Builds the bench's session
+  * ([[graft.GraftSession]]) so the dumped plan matches what the bench
+  * executes at the same `SPARK_GRAFT_CPUS`.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4, "usage: PlanDump <sfdir> <outdir> <suffix> <names>")
     val Array(sfDir, outDir, suffix, namesCsv) = args.take(4)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.getOrCreate("graft-plan-dump")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     namesCsv.split(",").foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.GraftSession.withConf
 
 /** Scratch profiler for the round-14 streaming-family drift (VERDICT
   * item #1): q55_stream_join / q49_stream_batch_parity /
@@ -23,17 +23,7 @@ import org.apache.spark.sql.functions._
 object ProfileStreaming {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile-streaming")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.getOrCreate("graft-profile-streaming")
 
     def time(label: String)(body: => Unit): Double = {
       val t0 = System.nanoTime()
@@ -78,9 +68,7 @@ object ProfileStreaming {
       val joined = graft.streaming.StreamingDedup.intervalJoin(
         side("a", 0), side("b", 1), "a_user", "b_user", "a_ts", "b_ts",
         lateness = "1 hour", bound = "30 minutes")
-      val before = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try {
+      withConf(spark, "spark.sql.shuffle.partitions" -> parts) {
         val t0 = System.nanoTime()
         val q = joined.select(col("a_id"), col("b_id"),
             col("a_user").as("user_id"))
@@ -105,7 +93,7 @@ object ProfileStreaming {
               .getOrElse(""))
         }
         spark.sql(s"DROP TABLE IF EXISTS prof_q55_$label")
-      } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+      }
     }
     q55Once("4", "warm1")
     q55Once("4", "warm2")

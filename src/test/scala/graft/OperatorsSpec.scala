@@ -296,6 +296,35 @@ class OperatorsSpec extends AnyFunSuite {
     assert(answers(dirA) === answers(dirU))
   }
 
+  test("pq index: a non-positive statsHint fails loudly") {
+    val dir = java.nio.file.Files.createTempDirectory("pq-hint").toString
+    val e = intercept[IllegalArgumentException] {
+      Similarity.buildPqIndex(emb, "vec_id", "embedding", dir,
+        statsHint = Some((0, 0L)))
+    }
+    assert(e.getMessage.contains("statsHint"), e.getMessage)
+  }
+
+  test("kmeans: a non-positive envelopeHint fails loudly on both hinted paths") {
+    import graft.operators.KMeans
+    val g = emb.filter(col("vec_id") < 50).withColumn("g", lit(0))
+    val cents = g.select(col("g"), col("vec_id").as("cid"),
+      expr("transform(embedding, v -> CAST(round(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT))")
+        .as("cs")).limit(2)
+    for (bad <- Seq((0, 1L, 1L), (4, 0L, 1L), (4, 1L, -1L))) {
+      val e1 = intercept[IllegalArgumentException] {
+        KMeans.assignGroupedFrozen(g, cents, "g", "vec_id", "embedding", 2,
+          envelopeHint = Some(bad))
+      }
+      assert(e1.getMessage.contains("envelopeHint"), e1.getMessage)
+      val e2 = intercept[IllegalArgumentException] {
+        KMeans.fitGroupedSampled(g, g, "g", "vec_id", "embedding", 2, 1,
+          envelopeHint = Some(bad))
+      }
+      assert(e2.getMessage.contains("envelopeHint"), e2.getMessage)
+    }
+  }
+
   test("opq index: recall@10 >= plain PQ on correlated dims; build is bit-deterministic") {
     import spark.implicits._
     // correlated fixture — the regime OPQ exists for (Ge et al. §1:
