@@ -1,12 +1,9 @@
 package graft.loader
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
-import graft.core.{CanNotUploadFileException, SchemaChangedException}
+import graft.core.{CanNotUploadFileException, ParquetFooter, SchemaChangedException}
 
 /** HDFS small-file compaction policy: when a stream flushes, instead of
   * always creating a new file, the most recent file in the stream dir is
@@ -59,13 +56,13 @@ object Compaction {
     * gate: the existing file's columns (names and types) must equal the
     * stream schema exactly, else [[SchemaChangedException]] — schema
     * evolution is rejected, never merged. The file's schema comes from its
-    * footer, read on the driver ([[footerSchema]]), so the preload costs no
+    * footer, read on the driver ([[ParquetFooter.footerSchema]]), so the preload costs no
     * schema-inference job. */
   def readMostRecentFile(spark: SparkSession, dir: String,
       expectedSchema: StructType, limit: Long): Option[(DataFrame, Path)] = {
     val hfs = fs(spark, dir)
     mostRecentFile(hfs, dir).filter(_.getLen < limit).map { status =>
-      val df = spark.read.schema(footerSchema(spark, status))
+      val df = spark.read.schema(ParquetFooter.footerSchema(spark, status))
         .parquet(status.getPath.toString)
       // _sdc_* stamps are loader-internal bookkeeping, not tap schema: a
       // stream toggling versioned replication or add_record_metadata must
@@ -81,20 +78,6 @@ object Compaction {
       }
       (df, status.getPath)
     }
-  }
-
-  /** The Spark schema of one parquet file, from its footer alone: the
-    * schema Spark stored under `org.apache.spark.sql.parquet.row.metadata`
-    * when it wrote the file, else the parquet schema converted by
-    * `ParquetToSparkSchemaConverter` — the same rule (and session conf)
-    * `spark.read.parquet` applies, without its schema-inference job. */
-  def footerSchema(spark: SparkSession, status: FileStatus): StructType = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status,
-      spark.sparkContext.hadoopConfiguration))
-    try ParquetFileFormat.readSchemaFromFooter(
-      new Footer(status.getPath, reader.getFooter),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    finally reader.close()
   }
 
   /** Write `df` as exactly ONE parquet file at `target`: stage into

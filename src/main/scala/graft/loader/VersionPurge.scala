@@ -3,7 +3,7 @@ package graft.loader
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.{CanNotUploadFileException, GraftConfig}
+import graft.core.{CanNotUploadFileException, GraftConfig, ParquetFooter}
 
 /** ACTIVATE_VERSION semantics (singer-sdk inherited behavior; the reference
   * receives the message through the same loop, reference target_hdfs/
@@ -19,8 +19,8 @@ import graft.core.{CanNotUploadFileException, GraftConfig}
   * — deleting them on a version bump would destroy data, so they are kept,
   * conservatively).
   *
-  * Scale shape: one distributed filter-rewrite job over the stream dir (no
-  * driver loop over files), staged into a sibling tmp dir and swapped by
+  * Scale shape: one distributed filter-rewrite job over the stream dir
+  * (the driver reads only each file's footer, for the merged schema), staged into a sibling tmp dir and swapped by
   * two directory renames — same staged-rename commit the per-file
   * compaction uses (reference utils/hdfs.py:56-73). On object stores the
   * rename window is the usual non-atomic caveat; the old data stays
@@ -53,10 +53,12 @@ object VersionPurge {
     val dirPath = new Path(dir)
     if (!hfs.exists(dirPath)) return // nothing loaded yet — activate is a no-op
 
-    // mergeSchema: files written before versioned replication began lack the
-    // stamp column; their rows read as NULL and are kept
-    val df = spark.read.option("mergeSchema", "true").parquet(dir)
-    if (!df.columns.contains(SdcTableVersionCol)) return
+    // files written before versioned replication began lack the stamp
+    // column; under the merged schema (built from the footers, so no
+    // inference job) their rows read it as NULL and are kept
+    val merged = ParquetFooter.mergedSchema(spark, dir).getOrElse(return)
+    if (!merged.fieldNames.contains(SdcTableVersionCol)) return
+    val df = spark.read.schema(merged).parquet(dir)
 
     val keep = df.filter(
       col(SdcTableVersionCol).isNull || col(SdcTableVersionCol) >= version)

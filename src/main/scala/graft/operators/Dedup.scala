@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.HashExprs._
@@ -411,38 +411,32 @@ object Dedup {
     * (`source_a < source_b`; `n_a`/`n_b` are each source's distinct
     * shingle counts, so Jaccard/containment are one division away).
     *
-    * Scale shape: distinct `(shingle, source)` first (one shuffle on the
-    * shingle hash), then the per-shingle source SET — bounded by the
-    * number of SOURCES, a corpus-provenance label with tens-to-hundreds
-    * of values, never by document count — and C(sources-present, 2) pair
-    * emission per shingle. Never a doc-doc or shingle-posting-pair join:
-    * a boilerplate shingle in every doc of two sources costs ONE pair
-    * row, where a postings-pair kernel would emit C(df, 2). */
+    * Scale shape: ONE shuffle on the shingle hash builds each shingle's
+    * sorted source SET — the distinct `(shingle, source)` table, bounded
+    * by the number of SOURCES (a corpus-provenance label with
+    * tens-to-hundreds of values), never by document count. Each set's
+    * ascending source pairs, diagonal included, feed one aggregate:
+    * `(a, a)` counts the distinct shingles of source a (its total),
+    * `(a, b)` with a < b the shingles both hold. Never a doc-doc or
+    * shingle-posting-pair join: a boilerplate shingle in every doc of two
+    * sources costs ONE pair row, where a postings-pair kernel would emit
+    * C(df, 2). */
   def sourceOverlap(docs: DataFrame, textCol: String,
       sourceCol: String): DataFrame = {
-    // the distinct (src, shingle) table — the operator's dominant cost —
-    // feeds TWO aggregations (per-source totals, per-shingle source sets)
-    // whose groupings share no exchange; persist it once and release after
-    // the (tiny, #source-pairs-row) result materializes
-    val srcSh = materialized(srcShingles(docs, textCol, sourceCol).distinct())
-    val totals = srcSh.groupBy(col("src")).agg(count(lit(1)).as("n"))
-    val pairs = srcSh.groupBy(col("s"))
-      .agg(sort_array(collect_set(col("src"))).as("srcs"))
-      .filter(size(col("srcs")) >= 2)
-      .select(explode(expr(
-        """flatten(transform(sequence(1, size(srcs) - 1),
-          |  i -> transform(sequence(0, i - 1),
-          |    j -> struct(element_at(srcs, j + 1) AS sa,
-          |                element_at(srcs, i + 1) AS sb))))""".stripMargin))
-        .as("p"))
-      .groupBy(col("p.sa").as("source_a"), col("p.sb").as("source_b"))
-      .agg(count(lit(1)).as("n_shared"))
-    val out = pairs
-      .join(totals.select(col("src"), col("n").as("n_a")),
-        pairs("source_a") === col("src")).drop("src")
-      .join(totals.select(col("src"), col("n").as("n_b")),
-        pairs("source_b") === col("src")).drop("src")
-    finalized(out, srcSh)
+    val cells = srcShingles(docs, textCol, sourceCol)
+      .groupBy(col("s")).agg(sort_array(collect_set(col("src"))).as("srcs"))
+      .select(ascendingPairs("srcs", "sa", "sb", diagonal = true))
+      .groupBy(col("p.sa").as("sa"), col("p.sb").as("sb"))
+      .agg(count(lit(1)).as("n"))
+    // each pair reads both totals off the diagonal through a window over
+    // the (sources²-row) cell table — no join, no broadcast
+    val total = max(when(col("sa") === col("sb"), col("n")))
+    finalized(cells
+      .withColumn("n_a", total.over(Window.partitionBy(col("sa"))))
+      .withColumn("n_b", total.over(Window.partitionBy(col("sb"))))
+      .filter(col("sa") < col("sb"))
+      .select(col("sa").as("source_a"), col("sb").as("source_b"),
+        col("n").as("n_shared"), col("n_a"), col("n_b")))
   }
 
   /** Sketch variant of [[sourceOverlap]] for corpora where even the
@@ -475,9 +469,25 @@ object Dedup {
         expr("hll_sketch_estimate(sk_b)").as("n_b_est"))
   }
 
+  /** Ascending element pairs of the SORTED, duplicate-free array column
+    * `set`, exploded to one row per pair as struct `p` with fields `a` < `b`
+    * (nested `transform`s, no shuffle): C(k, 2) rows for k elements, plus
+    * the k (x, x) rows when `diagonal`. Without the diagonal the array
+    * needs at least 2 elements (`sequence(1, 0)` counts down). */
+  private[operators] def ascendingPairs(set: String, a: String, b: String,
+      diagonal: Boolean): Column = {
+    val (first, lastJ) = if (diagonal) (0, "i") else (1, "i - 1")
+    explode(expr(
+      s"""flatten(transform(sequence($first, size($set) - 1),
+         |  i -> transform(sequence(0, $lastJ),
+         |    j -> struct(element_at($set, j + 1) AS $a,
+         |                element_at($set, i + 1) AS $b))))""".stripMargin))
+      .as("p")
+  }
+
   /** `(src, shingle)` rows, NULL sentinel (docs with <3 words) stripped —
-    * NOT distinct: [[sourceOverlap]] needs the exact distinct (one shuffle),
-    * the HLL variant lets the sketch absorb duplicates instead. */
+    * NOT distinct: [[sourceOverlap]] dedups through its per-shingle source
+    * sets, the HLL variant lets the sketch absorb duplicates instead. */
   private def srcShingles(docs: DataFrame, textCol: String,
       sourceCol: String): DataFrame =
     docs.select(col(sourceCol).as("src"),
@@ -604,6 +614,11 @@ object Dedup {
     *    DataFrames), O(log diameter) rounds, all data movement distributed,
     *    labels checkpointed per round, convergence by exact changed-count.
     * Both paths emit identical (id, cluster=min reachable id) labels.
+    *
+    * Storage: a `pairs` frame the caller has cached stays the caller's to
+    * unpersist; an uncached (lazy) one is cached here for the edge count
+    * and the labeling, and released before return. The result is
+    * persisted and materialized; the caller owns it.
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       smallGraphMaxEdges: Long = 20_000_000L): DataFrame = {
@@ -613,17 +628,22 @@ object Dedup {
     // single-pass union-find beats tens of per-round shuffle jobs by orders
     // of magnitude; past the threshold the distributed min-label loop below
     // takes over. Both produce identical labels (min id per component).
-    // (`pairs` arrives materialized from the near-dup operators, so the
-    // count is a cache scan, not a recompute.)
-    val pairCount = pairs.count()
+    // The edge count is the one driver decision, made once over a cached
+    // pair list, so the labeling reads the cache instead of a recompute.
+    val owned = pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val cachedPairs = if (owned) pairs.persist() else pairs
+    val release = if (owned) Seq(cachedPairs) else Nil
+    val pairCount = cachedPairs.count()
     if (pairCount <= smallGraphMaxEdges / 2 && integralType(pairs.schema("id_a").dataType)) {
       val spark0 = pairs.sparkSession
       import spark0.implicits._
       val idType = pairs.schema("id_a").dataType
-      val labeled = pairs
+      // coalesce, not repartition: the one union-find task reads every
+      // cached partition, with no shuffle in between
+      val labeled = cachedPairs
         .select(col("id_a").cast("long"), col("id_b").cast("long"))
         .as[(Long, Long)]
-        .repartition(1)
+        .coalesce(1)
         .mapPartitions { it =>
           // union-find with path compression; final label = component min id
           val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -655,12 +675,14 @@ object Dedup {
       val singletonsSmall = nodes.select(col("id"))
         .join(broadcast(labeled.select(col("id"))), Seq("id"), "left_anti")
         .select(col("id"), col("id").as("cluster"))
-      return finalized(labeled.unionByName(singletonsSmall), labeled)
+      return finalized(labeled.unionByName(singletonsSmall),
+        labeled +: release: _*)
     }
 
     // bidirectional edges; isolated nodes keep their own label
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+    val edges = cachedPairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .unionByName(cachedPairs.select(col("id_b").as("src"),
+        col("id_a").as("dst")))
       .persist()
     // only nodes touching an edge need propagation; singletons (the vast
     // majority of a near-dup graph) are their own cluster by definition
@@ -716,7 +738,8 @@ object Dedup {
       // silently mark several members of one true cluster as survivors
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxRounds rounds")
-    val out = finalized(labels.unionByName(singletons), edges, connected)
+    val out = finalized(labels.unionByName(singletons),
+      Seq(edges, connected) ++ release: _*)
     // the final round's checkpoint is consumed by the (now materialized)
     // persisted result — release it too
     releaseCheckpoint(labels)

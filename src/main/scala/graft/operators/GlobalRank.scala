@@ -103,10 +103,13 @@ object GlobalRank {
     * column `name` — all the cumulative columns ride the SAME per-shard
     * window and the SAME ≤`shards`-row offset aggregate. Returns the
     * frame (original columns + the added ones) plus (total row count,
-    * grand total per cumulative). */
+    * grand total per cumulative). With `grandTotals = false` the fast path
+    * runs no job (the totals are empty) and `knownCount` need only bound
+    * the row count. */
   private def rankedCore(df: DataFrame, value: Column, asc: Boolean,
       tie: Column, rankCol: String, cums: Seq[(Column, String)],
-      knownCount: Long = -1L): (DataFrame, Long, Seq[Long]) = {
+      knownCount: Long = -1L,
+      grandTotals: Boolean = true): (DataFrame, Long, Seq[Long]) = {
     val spark = df.sparkSession
     val shards = spark.sessionState.conf.numShufflePartitions
     val sv = if (asc) value.cast("long") else -value.cast("long")
@@ -123,7 +126,7 @@ object GlobalRank {
           w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       }
       val grands =
-        if (cums.isEmpty) Seq.empty[Long]
+        if (cums.isEmpty || !grandTotals) Seq.empty[Long]
         else {
           val aggs = cums.zipWithIndex.map { case ((c, _), i) =>
             sum(c.cast("long")).as(s"__s$i") }
@@ -209,6 +212,17 @@ object GlobalRank {
     val (out, _, grands) =
       rankedCore(df, value, asc, tie, rk, Seq((sumOf, cumCol)), knownCount)
     (out.drop(rk), grands.head)
+  }
+
+  /** [[withCumSum]] without the grand total, for callers that never read
+    * it: the small-input fast path then plans the window and runs nothing.
+    * `rowBound` is any upper bound on `df`'s row count (the fast path is
+    * taken at or below [[SmallInput]]); -1 means unknown. */
+  def withRunningSum(df: DataFrame, value: Column, asc: Boolean, tie: Column,
+      sumOf: Column, cumCol: String, rowBound: Long = -1L): DataFrame = {
+    val rk = "__gr_rn"
+    rankedCore(df, value, asc, tie, rk, Seq((sumOf, cumCol)), rowBound,
+      grandTotals = false)._1.drop(rk)
   }
 
   /** Several global running sums over ONE (`value` asc/desc, `tie` asc)

@@ -695,56 +695,103 @@ object Graph {
     * always qualifies), so two mutually-reachable nodes share a label
     * and a DAG gets all-singleton labels.
     *
-    * Implementation is transitive closure by frontier iteration (the
-    * [[reachability]] join shape run to fixpoint — rounds = graph
-    * diameter, each a key join + distinct), then ONE self-join of the
-    * closure against its transpose and a min aggregate. Closure size is
-    * O(n·reach) — honest ONLY at state-machine node counts, which is
-    * what the `maxNodes` guard enforces (the per-NODE grain analog of
-    * [[hits]]' `n <= scale` bound; corpus-grain SCC needs the multi-pivot
-    * forward-backward decomposition, out of scope here). Node ids ride
-    * through as longs. Output: (id, scc) — scc = smallest node id in the
-    * component. */
-  def scc(edges: DataFrame, maxNodes: Int = 10000,
-      maxDepth: Int = 64): DataFrame = {
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct().persist()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().persist()
-    val n = nodes.count()
-    require(n <= maxNodes,
-      s"scc: $n nodes exceed maxNodes=$maxNodes — this closure-based SCC " +
-        "is for state-machine-grain graphs; decompose or raise the bound")
-    // closure: reach(v, u) with v→*u (reflexive); frontier = pairs added
-    // last round, so each round joins only NEW pairs against the edges.
-    // reach = lazy UNION of per-round checkpointed frontiers (the
-    // reachability discipline): one eager checkpoint per round — the fresh
-    // pairs — instead of also re-copying the whole closure each round
-    // (the closure is the LARGEST frame here, O(n·reach) rows).
-    var frontier = nodes.select(col("id").as("v"), col("id").as("u"))
-      .localCheckpoint()
-    val parts = scala.collection.mutable.Buffer(frontier)
-    def reach = parts.reduce(_ union _)
-    var depth = 0
-    while (depth < maxDepth && !frontier.isEmpty) {
-      depth += 1
-      val grown = frontier.join(e, frontier("u") === e("src"))
-        .select(frontier("v"), e("dst").as("u")).distinct()
-      val fresh = grown.join(reach, Seq("v", "u"), "left_anti")
-        .localCheckpoint()
-      parts += fresh
-      frontier = fresh
-    }
-    val closure = reach
-    val out = closure.as("f")
-      .join(closure.select(col("v").as("u"), col("u").as("v")).as("b"),
-        Seq("v", "u"))
-      .groupBy(col("v").as("id")).agg(min(col("u")).as("scc"))
+    * Algorithm: the distinct edges reach ONE task (the distinct's final
+    * aggregate is coalesced to a single partition, so no second
+    * exchange), which runs an iterative Tarjan pass — O(nodes + edges),
+    * no recursion, no per-round Spark jobs — and labels each component
+    * with its smallest node id. This is the small-graph pattern of
+    * [[Dedup.connectedComponents]]'s union-find path.
+    *
+    * Bound: the task holds the graph in memory, so it refuses a graph
+    * with more than `maxNodes` distinct node ids (it stops reading at the
+    * first id past the bound); the driver rethrows that
+    * `IllegalArgumentException`. Corpus-grain SCC needs a distributed
+    * (multi-pivot forward-backward) decomposition, out of scope here.
+    *
+    * Output: (id, scc), node ids as longs, every node of any edge once.
+    * The result is persisted and materialized before return (that is how
+    * the bound is enforced at the call); the caller owns it and
+    * `unpersist()`s it when done. */
+  def scc(edges: DataFrame, maxNodes: Int = 10000): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val out = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .distinct().coalesce(1)
+      .as[(Long, Long)]
+      .mapPartitions(it => tarjanMinLabels(it, maxNodes))
+      .toDF("id", "scc")
       .persist()
-    out.count()
-    parts.foreach(Checkpoints.release)
-    e.unpersist(false)
-    nodes.unpersist(false)
+    try out.count()
+    catch { case e: org.apache.spark.SparkException =>
+      out.unpersist(false)
+      throw Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case bound: IllegalArgumentException => bound }
+        .getOrElse(e)
+    }
     out
+  }
+
+  /** (node, smallest node id of its strongly connected component) for
+    * every node of `edges`, by iterative Tarjan. Raises
+    * `IllegalArgumentException` once more than `maxNodes` node ids are
+    * seen. Duplicate edges are harmless (a repeat visit changes no
+    * low-link). */
+  private[operators] def tarjanMinLabels(edges: Iterator[(Long, Long)],
+      maxNodes: Int): Iterator[(Long, Long)] = {
+    import scala.collection.mutable.{ArrayBuffer, LongMap}
+    val index = LongMap.empty[Int]
+    val ids = ArrayBuffer.empty[Long]
+    val adj = ArrayBuffer.empty[ArrayBuffer[Int]]
+    def node(v: Long): Int = index.getOrElse(v, {
+      require(ids.size < maxNodes,
+        s"scc: more than maxNodes=$maxNodes nodes — this in-memory SCC is " +
+          "for state-machine-grain graphs; decompose or raise the bound")
+      index(v) = ids.size; ids += v; adj += ArrayBuffer.empty[Int]
+      ids.size - 1
+    })
+    edges.foreach { case (s, d) => val a = node(s); adj(a) += node(d) }
+    val n = ids.size
+    val order = Array.fill(n)(-1) // DFS discovery index, -1 = unvisited
+    val low = new Array[Int](n)
+    val onStack = new Array[Boolean](n)
+    val stack = new Array[Int](n)
+    var sp = 0
+    val frameNode = new Array[Int](n) // explicit DFS call stack:
+    val frameEdge = new Array[Int](n) // node and its next edge position
+    var fp = 0
+    val label = new Array[Long](n)
+    var counter = 0
+    def visit(v: Int): Unit = {
+      order(v) = counter; low(v) = counter; counter += 1
+      stack(sp) = v; sp += 1; onStack(v) = true
+      frameNode(fp) = v; frameEdge(fp) = 0; fp += 1
+    }
+    for (root <- 0 until n if order(root) < 0) {
+      visit(root)
+      while (fp > 0) {
+        val v = frameNode(fp - 1)
+        val i = frameEdge(fp - 1)
+        if (i < adj(v).length) {
+          frameEdge(fp - 1) = i + 1
+          val w = adj(v)(i)
+          if (order(w) < 0) visit(w)
+          else if (onStack(w)) low(v) = math.min(low(v), order(w))
+        } else {
+          fp -= 1
+          if (low(v) == order(v)) { // v roots a component: pop it
+            var top = sp
+            var m = Long.MaxValue
+            while ({ top -= 1; m = math.min(m, ids(stack(top))); stack(top) != v }) ()
+            for (k <- top until sp) { label(stack(k)) = m; onStack(stack(k)) = false }
+            sp = top
+          }
+          if (fp > 0) {
+            val u = frameNode(fp - 1)
+            low(u) = math.min(low(u), low(v))
+          }
+        }
+      }
+    }
+    Iterator.range(0, n).map(v => (ids(v), label(v)))
   }
 }

@@ -690,33 +690,35 @@ object Stats {
     * so tied midranks stay integers. The prefix count rides the
     * [[GlobalRank]] sharded cumulative — value-grain but fully parallel,
     * so an (almost-)continuous metric needs no compactness cap here.
-    * Input: (v: long, t: rows at v). Output: + (dr). */
-  private def doubledMidranks(pv: DataFrame,
-      knownCount: Long = -1L): DataFrame = doubledMidranksProbe(pv, knownCount)
-
-  /** [[doubledMidranks]] exposed for the dev-only PerfProbe harness. */
-  private[graft] def doubledMidranksProbe(pv: DataFrame,
-      knownCount: Long = -1L): DataFrame = {
-    val (cum, _) = GlobalRank.withCumSum(pv, col("v"), asc = true,
-      col("v"), col("t"), "cumt", knownCount)
-    cum.withColumn("dr", lit(2) * (col("cumt") - col("t")) + col("t") + 1)
-  }
+    * Input: (v: long, t: rows at v); `rowBound` is any upper bound on its
+    * rows (the [[GlobalRank.withRunningSum]] fast-path gate).
+    * Output: + (dr). */
+  private def doubledMidranks(pv: DataFrame, rowBound: Long = -1L): DataFrame =
+    GlobalRank.withRunningSum(pv, col("v"), asc = true, col("v"), col("t"),
+        "cumt", rowBound)
+      .withColumn("dr", lit(2) * (col("cumt") - col("t")) + col("t") + 1)
 
   /** Spearman rank correlation between two numeric columns — the
     * monotone-association gate (quality score vs length, price vs
     * quantity) that Pearson's linearity assumption breaks on. Both
     * variables integerize at their scale, reduce to value grain, take
     * exact DOUBLED midranks ([[doubledMidranks]] — ties handled the
-    * textbook way), and each row joins its two ranks back (two key joins
-    * against value-grain tables). ρ is then Pearson over the doubled
-    * ranks: all moment sums (Σa, Σb, Σab, Σa², Σb²) are EXACT integer
-    * aggregates; the closing `(n·Σab − Σa·Σb) / √(...)` is one mirrored
-    * double expression over those exact longs, rounded at 6. n²-scale
-    * products ride doubles identically in both engines (they exceed
-    * 2⁶³ long before they exceed IEEE range).
+    * textbook way); the x ranks broadcast back onto the rows, which fold
+    * to y grain. ρ is then Pearson over the doubled ranks: all moment
+    * sums (Σa, Σb, Σab, Σa², Σb²) are EXACT integer aggregates; the
+    * closing `(n·Σab − Σa·Σb) / √(...)` is one mirrored double expression
+    * over those exact longs, rounded at 6. n²-scale products ride doubles
+    * identically in both engines (they exceed 2⁶³ long before they exceed
+    * IEEE range).
+    *
+    * Eager work: one row count (no shuffle) picks the plan; up to
+    * [[GlobalRank.SmallInput]] rows it is one task end to end. The result
+    * is persisted and materialized (the caller `unpersist()`s it); any
+    * cache taken on the way is released before return.
     * Output: one row (n, rho). */
   def spearman(df: DataFrame, xCol: String, yCol: String,
       xScale: Double = 1e6, yScale: Double = 1e6): DataFrame = {
+    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val base = df
       .filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(round(col(xCol) * xScale).cast("long").as("x"),
@@ -726,20 +728,35 @@ object Stats {
     // grain is NEVER joined against the near-row-grain y-rank table —
     // the round-11 formulation paid a 600k ⋈ 583k sort-merge join at
     // sf0.1 for exactly that. Instead ONE aggregate folds the rows to y
-    // grain carrying the x-rank sum: Σ_rows dr_x·dr_y =
-    // Σ_y dr_y·(Σ_{rows at y} dr_x), exact integer algebra, so every
-    // moment after the fold is a y-grain (or x-grain) sum and the only
-    // row-grain work left is the broadcast join + hash aggregate.
-    val pvx = base.groupBy(col("x").as("v")).agg(count(lit(1)).as("t"))
-      .persist()
-    val rx = doubledMidranks(pvx, pvx.count()).persist()
-    val pvy = base
+    // grain carrying the x-rank sums: Σ_rows dr_x·dr_y =
+    // Σ_y dr_y·(Σ_{rows at y} dr_x), and likewise Σ_rows dr_x and
+    // Σ_rows dr_x² fold through y grain, exact integer algebra, so every
+    // moment is ONE y-grain aggregate and the only row-grain work left is
+    // the broadcast join + hash aggregate.
+    //
+    // The one driver decision is the row count n (one scan, no shuffle).
+    // At or below [[GlobalRank.SmallInput]] rows the whole statistic runs
+    // in ONE task: one shuffle moves the rows to a single partition (a
+    // shuffle, not a coalesce, so whatever computes `df` keeps its
+    // parallelism), after which the aggregates, both rank windows (fast
+    // path: n bounds both value counts) and the moments need no further
+    // exchange. Past the bound the x side (bounded cardinality in every
+    // in-repo use) is counted exactly, over a cache its rank pass then
+    // reads, and the y side ranks sharded.
+    val n = base.queryExecution.toRdd.count()
+    val small = n <= GlobalRank.SmallInput
+    val rows = if (small) base.repartition(1) else base
+    val pvx0 = rows.groupBy(col("x").as("v")).agg(count(lit(1)).as("t"))
+    val (pvx, nx) =
+      if (small) (pvx0, n) else { val p = pvx0.persist(); (p, p.count()) }
+    val rx = doubledMidranks(pvx, nx)
+    val pvy = rows
       .join(broadcast(rx.select(col("v").as("x"), col("dr").as("dr_x"))),
         Seq("x"))
       .groupBy(col("y").as("v"))
-      .agg(count(lit(1)).as("t"), sum(col("dr_x")).as("sx"))
-      .persist()
-    val ry = doubledMidranks(pvy, pvy.count())
+      .agg(count(lit(1)).as("t"), sum(col("dr_x")).as("sx"),
+        sum((col("dr_x") * col("dr_x")).cast(dec)).as("sxx"))
+    val ry = doubledMidranks(pvy, n)
     // the SQUARED-rank moment sums pass 2⁶³ near 2-3·10⁶ rows (dr ≤ 2n,
     // so Σdr² ~ 4n³) — ANSI Spark fails loud there; DECIMAL(38,0) keeps
     // them exact to 10³⁸ rows³ and DuckDB's HUGEINT sums mirror it (the
@@ -748,19 +765,16 @@ object Stats {
     // bound; the t/sx multiplier rides the decimal side of each product.
     // The closing expression reads the moments through the same
     // exact-integer→double conversion as before.
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val xm = rx.agg(sum(col("t") * col("dr")).as("sa"),
-      sum((col("dr") * col("dr")).cast(dec) * col("t")).as("saa"))
-    val ym = ry.agg(coalesce(sum(col("t")), lit(0L)).as("n"),
-      sum(col("t") * col("dr")).as("sb"),
-      sum((col("dr") * col("dr")).cast(dec) * col("t")).as("sbb"),
-      sum(col("dr").cast(dec) * col("sx")).as("sab"))
-    finalized(ym.crossJoin(xm)
+    finalized(ry.agg(coalesce(sum(col("t")), lit(0L)).as("n"),
+        sum(col("sx")).as("sa"), sum(col("sxx")).as("saa"),
+        sum(col("t") * col("dr")).as("sb"),
+        sum((col("dr") * col("dr")).cast(dec) * col("t")).as("sbb"),
+        sum(col("dr").cast(dec) * col("sx")).as("sab"))
       .select(col("n"), expr(
         """round((CAST(n AS DOUBLE) * sab - CAST(sa AS DOUBLE) * sb)
           |  / sqrt((CAST(n AS DOUBLE) * saa - CAST(sa AS DOUBLE) * sa)
           |       * (CAST(n AS DOUBLE) * sbb - CAST(sb AS DOUBLE) * sb)), 6)"""
-          .stripMargin).as("rho")), pvx, rx, pvy)
+          .stripMargin).as("rho")), pvx)
   }
 
   /** ROC AUC of a score against a binary label, with exact midrank tie

@@ -661,33 +661,23 @@ object TextAnalysis {
     * would otherwise emit O(df²) pairs — the containment-join discipline,
     * a lossy-only-for-stopword-fps cap the caller sizes). Pair emission is
     * Σ C(df, 2) over surviving postings — never all-pairs.
+    *
+    * Plan: ONE exchange on `fp` serves the postings distinct, the df and
+    * the self-join — each fingerprint's sorted id SET is its distinct
+    * postings, the set's size is its df, and its ascending id pairs are
+    * the join output; one more aggregate counts shared fingerprints per
+    * pair. Lazy: nothing runs until the caller's action, and nothing is
+    * left cached. NULL ids post nothing.
     * Output: (id_a, id_b, n_shared), id_a < id_b. */
   def winnowPairs(docs: DataFrame, idCol: String, textCol: String,
-      w: Int = 4, minShared: Int = 3, dfCap: Int = 50): DataFrame = {
-    // fps is cached: the native WinnowSelect extraction is the expensive
-    // narrow pass, and it feeds the df filter plus BOTH pair-join sides
-    val fps = winnowFingerprints(docs, idCol, textCol, w)
-      .select(col("id"), col("fp")).distinct().persist()
-    val kept = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= dfCap)
-      .select(col("fp"))
-    // renamed-column self-join (the BasketAnalysis discipline): aliased
-    // frames with identical lineage can silently resolve both sides of a
-    // col("a.fp") === col("b.fp") predicate to ONE attribute — a
-    // trivially-true condition that degenerates the equi-join into a
-    // cartesian. Seq-key joins over renamed projections cannot.
-    val posts = fps.join(kept, Seq("fp"))
-    val out = posts.select(col("fp"), col("id").as("id_a"))
-      .join(posts.select(col("fp"), col("id").as("id_b")), Seq("fp"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
+      w: Int = 4, minShared: Int = 3, dfCap: Int = 50): DataFrame =
+    winnowFingerprints(docs, idCol, textCol, w)
+      .groupBy(col("fp")).agg(sort_array(collect_set(col("id"))).as("ids"))
+      .filter(size(col("ids")) >= 2 && size(col("ids")) <= dfCap)
+      .select(Dedup.ascendingPairs("ids", "id_a", "id_b", diagonal = false))
+      .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-      .persist()
-    out.count()
-    fps.unpersist(false)
-    out
-  }
 
   /** Persist a winnow-fingerprint postings index — the MOSS analog of
     * [[graft.operators.Dedup.buildMinhashIndex]]'s lifecycle:
@@ -918,7 +908,7 @@ object TextAnalysis {
     * restarts the offset at each source): one corpus-wide token stream,
     * so the crossing flag is meaningful — that is what the attention
     * mask pays for. The global running token offset rides
-    * [[GlobalRank.withCumSum]]'s sharded machinery — no corpus-grain
+    * [[GlobalRank.withRunningSum]]'s sharded machinery — no corpus-grain
     * single-partition window at any corpus size; everything else is a
     * projection. Exact integer
     * arithmetic throughout.
@@ -929,7 +919,7 @@ object TextAnalysis {
     val base = docs
       .filter(col(idCol).isNotNull && col(textCol).isNotNull)
       .select(col(idCol).as("id"), tokenCount(textCol).as("n_tokens"))
-    val (cum, _) = GlobalRank.withCumSum(base, col("id"), asc = true,
+    val cum = GlobalRank.withRunningSum(base, col("id"), asc = true,
       col("id"), col("n_tokens"), "cum")
     cum.select(col("id"), col("n_tokens"),
       expr(s"(cum - n_tokens) div ${seqLen}L").as("start_bin"),

@@ -450,10 +450,11 @@ object Extensions {
     // source pair, with per-source totals (Jaccard/containment are one
     // division away). Pairs come from each shingle's bounded SOURCE set,
     // never from doc-doc or postings-pair joins — see Dedup.sourceOverlap
-    // 4 MB advisory (the q140/q117 discipline): the distinct (src,
-    // shingle) exchange is byte-light but feeds the collect_set +
-    // nested-transform pair explode — default AQE coalescing folded it
-    // to 3 tasks (measured 0.7-1.9 s stage)
+    // 4 MB advisory (the q140 discipline): the shingle-keyed exchange is
+    // byte-light but feeds the collect_set + nested-transform pair
+    // explode — default AQE coalescing folded it to 3 tasks (measured
+    // 0.7-1.9 s stage). Live: sourceOverlap materializes its result
+    // inside the scope.
     Q("text_overlap_matrix", (s, d) =>
       withConf(s, "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (4L << 20).toString) {
         Dedup.sourceOverlap(Tables.ts(s, d, "documents"), "text", "source")

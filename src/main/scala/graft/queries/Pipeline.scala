@@ -500,13 +500,13 @@ object Pipeline {
               Seq("l_orderkey"))
             .filter(col("id_a") < col("id_b"))
             .select(col("id_a"), col("id_b"))).distinct()
-      // A/B probe (PerfProbe `aa` mode, sf0.1 warm): AQE-on/8 2.0-2.4 s
-      // vs the k-core-inherited AQE-off/8 2.6-2.9 s — the wedge join's
-      // bigger intermediate WANTS AQE's runtime coalescing.
-      // 4 MB advisory (the text_chrf/q140 discipline): the wedge join's
-      // z-keyed exchange is byte-LIGHT but generates the x<y expansion on
-      // top of it — default coalescing folded it to ONE task (measured
-      // 1.3 s serial stage). Merge-only, a no-op at scale.
+      // Intended: a 4 MB advisory size and 8 partitions for the wedge
+      // join's z-keyed exchange (byte-light, but the x<y expansion sits on
+      // top of it). The scope is INERT today: `Graph.adamicAdar` is lazy,
+      // so the scope has closed before the runner's action plans the
+      // exchanges, and they plan at the session conf. It becomes live
+      // once the runner applies an entry's conf around its action
+      // (ROADMAP A); until then no measurement of it exists.
       withConf(s, "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (4L << 20).toString,
           "spark.sql.shuffle.partitions" -> "8") {
         Graph.adamicAdar(pp, maxDegree = None, topK = 50)

@@ -15,9 +15,14 @@ final case class Q(
     oracle: Option[String])
 
 object Tables {
-  /** All testdata tables are single parquet files `{dir}/{name}.parquet`. */
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** All testdata tables are single parquet files `{dir}/{name}.parquet`.
+    * The schema comes from the file's footer, read on the driver, so the
+    * read plans no schema-inference job. */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(graft.core.ParquetFooter.fileSchema(spark, path))
+      .parquet(path)
+  }
 
   /** `events` with `ts` normalized to a microsecond timestamp. Parquet
     * written by different tools lands differently in Spark: TIMESTAMP(NANOS)

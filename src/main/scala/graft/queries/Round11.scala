@@ -471,9 +471,9 @@ object Round11 {
         .select(col("event_type"),
           expr(graft.functions.HashExprs.sparkCharHash("event_type"))
             .as("id"))
-      // labels stays persisted (the Graph.scc output-ownership contract —
-      // unpersisting before this join materializes would recompute through
-      // the released closure checkpoints)
+      // labels stays persisted: Graph.scc hands its materialized output to
+      // the caller, and unpersisting it before this join runs would only
+      // recompute it
       labels.join(names, "id")
         .join(names.select(col("event_type").as("scc_type"),
           col("id").as("scc")), "scc")

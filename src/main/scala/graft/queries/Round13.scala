@@ -514,7 +514,6 @@ object Round13 {
         .groupBy(col("min_shared"))
         .agg(coalesce(sum(col("c")), lit(0L)).as("n_pairs"))
       out.persist().count()
-      pairs.unpersist(false)
       out
     }, Some(s"""
       WITH ${Round12.duckWinnowSel},
@@ -720,17 +719,17 @@ object Round13 {
     // connected components over the MOSS near-dup pair graph (the
     // dedup_clusters composition pointed at winnowing's local-guarantee
     // pairs): cluster = min reachable doc id, keep id == cluster.
+    // The node ids come from the raw scan: only the shingling side needs
+    // the spread, and spreading the id list would shuffle the full text.
     Q("dedup_winnow_clusters", (s, d) => {
-      val docs = Tables.ts(s, d, "documents")
-      val pairs = TextAnalysis.winnowPairs(docs, "doc_id", "text",
-          w = 4, minShared = 3, dfCap = 50)
+      val docs = t(s, d, "documents")
+      val pairs = TextAnalysis.winnowPairs(Tables.spread(docs), "doc_id",
+          "text", w = 4, minShared = 3, dfCap = 50)
         .select(col("id_a"), col("id_b"))
-      val out = graft.operators.Dedup
+      graft.operators.Dedup
         .connectedComponents(docs.select(col("doc_id").as("id")), pairs)
         .select(col("id"), col("cluster"),
           (col("id") === col("cluster")).as("is_kept"))
-      pairs.unpersist(false)
-      out
     }, Some(s"""
       WITH RECURSIVE ${Round12.duckWinnowSel},
       fps AS (SELECT DISTINCT id, CAST(e // $K AS BIGINT) AS fp FROM sel),

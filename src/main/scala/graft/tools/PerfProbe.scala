@@ -216,37 +216,6 @@ object PerfProbe {
           }
           println(f"[probe] $n reps=${reps.map(r => f"$r%.2f").mkString(",")}")
         }
-      case "aa" =>
-        // A/B the execution scope of the q117 Adamic-Adar body: the
-        // AQE-off/8-partition scope was inherited from the k-core entry,
-        // but the wedge join is a much bigger intermediate
-        import graft.operators.Graph
-        import graft.queries.Tables
-        val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-          .filter(col("l_partkey") % 5 === 0)
-          .select(col("l_orderkey"), col("l_partkey"))
-        def pp = Tables.spread(
-            li.select(col("l_orderkey"), col("l_partkey").as("id_a"))
-              .join(li.select(col("l_orderkey"), col("l_partkey").as("id_b")),
-                Seq("l_orderkey"))
-              .filter(col("id_a") < col("id_b"))
-              .select(col("id_a"), col("id_b"))).distinct()
-        def run(tag: String)(body: => DataFrame): Unit = {
-          val reps = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            body.write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"[probe] aa/$tag reps=${reps.map(r => f"$r%.2f").mkString(",")}")
-        }
-        run("aqeoff8")(withConf(spark, "spark.sql.adaptive.enabled" -> "false",
-            "spark.sql.shuffle.partitions" -> "8") {
-          Graph.adamicAdar(pp, None, 50) })
-        run("aqeon32")(Graph.adamicAdar(pp, None, 50))
-        run("aqeon8")(withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
-          Graph.adamicAdar(pp, None, 50) })
-        run("aqeoff32")(withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
-          Graph.adamicAdar(pp, None, 50) })
       case "decon" =>
         // A/B the text_decontaminate input layout vs the r5 record shape:
         // the entry spreads `documents` once and feeds THREE consumers
@@ -412,66 +381,6 @@ object PerfProbe {
             }
           }
           spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
-
-      case "spearmansteps" =>
-        // phase-level timing of Stats.spearman's pipeline at q140's params
-        import org.apache.spark.sql.functions._
-        def time[A](label: String)(body: => A): A = {
-          val t0 = System.nanoTime(); val r = body
-          println(f"[probe] $label ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-        }
-        val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        (1 to 2).foreach { rep =>
-          println(s"[probe] --- rep $rep")
-          val base = li
-            .filter(col("l_quantity").isNotNull && col("l_extendedprice").isNotNull)
-            .select(round(col("l_quantity") * 1.0).cast("long").as("x"),
-              round(col("l_extendedprice") * 100.0).cast("long").as("y"))
-          val pvx = base.groupBy(col("x").as("v")).agg(count(lit(1)).as("t")).persist()
-          val nx = time("pvx.count")(pvx.count())
-          val rx = time("rx mat") {
-            val r = graft.operators.Stats.doubledMidranksProbe(pvx, nx).persist()
-            r.count(); r
-          }
-          val pvy = base
-            .join(broadcast(rx.select(col("v").as("x"), col("dr").as("dr_x"))), Seq("x"))
-            .groupBy(col("y").as("v"))
-            .agg(count(lit(1)).as("t"), sum(col("dr_x")).as("sx"))
-            .persist()
-          val ny = time("pvy agg+count")(pvy.count())
-          time("aq 0.02") {
-            val probs = (1 until 32).map(_.toDouble / 32).toArray
-            pvy.select(col("v").cast("double").as("__d"))
-              .filter(col("__d").isNotNull)
-              .stat.approxQuantile("__d", probs, 0.02).length
-          }
-          time("shardcounts") {
-            pvy.groupBy((col("v") % 32).as("s")).agg(count(lit(1))).collect().length
-          }
-          time("shardcounts-fold") {
-            val probs = (1 until 32).map(_.toDouble / 32).toArray
-            val cuts = pvy.select(col("v").cast("double").as("__d"))
-              .stat.approxQuantile("__d", probs, 0.02)
-              .map(d => math.floor(d).toLong).distinct.sorted
-            val sh = cuts.foldLeft(lit(0)) { (acc, c) =>
-              acc + when(col("v") > lit(c), 1).otherwise(0) }
-            pvy.groupBy(sh.as("s"))
-              .agg(count(lit(1)), sum(col("t").cast("long"))).collect().length
-          }
-          val ry = time("ry cum (lazy)")(
-            graft.operators.Stats.doubledMidranksProbe(pvy, ny))
-          val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-          val ym = time("ym agg") {
-            ry.agg(coalesce(sum(col("t")), lit(0L)).as("n"),
-              sum(col("t") * col("dr")).as("sb"),
-              sum((col("dr") * col("dr")).cast(dec) * col("t")).as("sbb"),
-              sum(col("dr").cast(dec) * col("sx")).as("sab")).collect()
-          }
-          println(s"[probe] ym=${ym.toSeq}")
-          pvx.unpersist(); rx.unpersist(); pvy.unpersist()
           spark.sparkContext.getPersistentRDDs.values
             .foreach(_.unpersist(blocking = false))
         }

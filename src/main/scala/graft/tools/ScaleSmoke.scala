@@ -886,8 +886,7 @@ object ScaleSmoke {
       {
         import graft.operators.TextAnalysis
         def wp(d: DataFrame): Unit = {
-          val r = TextAnalysis.winnowPairs(d, "doc_id", "text", 4, 3, 50)
-          noop(r); r.unpersist()
+          noop(TextAnalysis.winnowPairs(d, "doc_id", "text", 4, 3, 50))
         }
         ("winnow_pairs", time("winnow_pairs 1x")(wp(d1)),
           time("winnow_pairs 10x")(wp(d10salt)))

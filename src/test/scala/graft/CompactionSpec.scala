@@ -124,7 +124,7 @@ class CompactionSpec extends AnyFunSuite {
     val fs = Compaction.fs(spark, s"$root/t")
     val file = Compaction.mostRecentFile(fs, s"$root/t").get
     val inferred = spark.read.parquet(file.getPath.toString).schema
-    val footer = Compaction.footerSchema(spark, file)
+    val footer = graft.core.ParquetFooter.footerSchema(spark, file)
     assert(footer.map(f => (f.name, f.dataType)) ===
       inferred.map(f => (f.name, f.dataType)))
     val (preload, _) =

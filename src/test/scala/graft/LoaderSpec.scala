@@ -438,6 +438,73 @@ class LoaderSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/v").count() === 1)
   }
 
+  val namedSchema =
+    """{"type": "SCHEMA", "stream": "v", "schema": {"type": "object", "properties": {"id": {"type": "integer"}, "name": {"type": ["string", "null"]}, "flag": {"type": ["boolean", "null"]}}}, "key_properties": ["id"]}"""
+
+  test("purge over a pre-versioned and a stamped file, then the next preload passes the schema gate") {
+    val out = tmpDir()
+    val fresh = GraftConfig(hdfsDestinationPath = out, skipExistingFiles = true)
+    // a file written before versioned replication began (no stamp column)
+    SingerLoader.loadFile(spark, writeFixture(Seq(namedSchema,
+      """{"type": "RECORD", "stream": "v", "record": {"id": 1, "name": "a", "flag": true}}""")),
+      fresh)
+    // a stamped v1 file
+    SingerLoader.loadFile(spark, writeFixture(Seq(namedSchema,
+      """{"type": "RECORD", "stream": "v", "record": {"id": 2, "name": "b", "flag": false}, "version": 1}""")),
+      fresh)
+    // the footers merge as Spark's mergeSchema inference does (which reads
+    // every column as nullable)
+    def fields(st: StructType) = st.map(f => (f.name, f.dataType))
+    assert(graft.core.ParquetFooter.mergedSchema(spark, s"$out/v").map(fields) ===
+      Some(fields(spark.read.option("mergeSchema", "true").parquet(s"$out/v").schema)))
+    // v2 supersedes v1: the unstamped row and the v2 row survive
+    SingerLoader.loadFile(spark, writeFixture(Seq(namedSchema,
+      """{"type": "RECORD", "stream": "v", "record": {"id": 3, "name": "c", "flag": null}, "version": 2}""",
+      """{"type": "ACTIVATE_VERSION", "stream": "v", "version": 2}""")),
+      fresh)
+    assert(spark.read.parquet(s"$out/v").select("id").as[Long](
+      org.apache.spark.sql.Encoders.scalaLong).collect().sorted.toSeq === Seq(1L, 3L))
+    // next sync, compaction on: the preload of the purged file must pass the
+    // strict gate (same columns, same order) and union with the new rows
+    SingerLoader.loadFile(spark, writeFixture(Seq(namedSchema,
+      """{"type": "RECORD", "stream": "v", "record": {"id": 4, "name": "d", "flag": true}}""")),
+      GraftConfig(hdfsDestinationPath = out))
+    val back = spark.read.parquet(s"$out/v")
+    assert(back.columns.toSeq === Seq("id", "name", "flag", "_sdc_table_version"))
+    assert(back.select("id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
+      .collect().sorted.toSeq === Seq(1L, 3L, 4L))
+  }
+
+  test("purge of a partition_cols stream keeps the hive layout") {
+    val out = tmpDir()
+    val cfg = GraftConfig(hdfsDestinationPath = out, partitionCols = Seq("flag"))
+    SingerLoader.loadFile(spark, writeFixture(Seq(namedSchema,
+      """{"type": "RECORD", "stream": "v", "record": {"id": 1, "name": "a", "flag": true}}""",
+      """{"type": "RECORD", "stream": "v", "record": {"id": 2, "name": "b", "flag": false}, "version": 1}""")),
+      cfg)
+    SingerLoader.loadFile(spark, writeFixture(Seq(namedSchema,
+      """{"type": "RECORD", "stream": "v", "record": {"id": 3, "name": "c", "flag": false}, "version": 2}""",
+      """{"type": "ACTIVATE_VERSION", "stream": "v", "version": 2}""")),
+      cfg)
+    val dirs = new java.io.File(s"$out/v").listFiles().map(_.getName)
+      .filter(_.startsWith("flag="))
+    assert(dirs.toSet === Set("flag=true", "flag=false"))
+    val back = spark.read.parquet(s"$out/v")
+    assert(back.select("id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
+      .collect().sorted.toSeq === Seq(1L, 3L))
+  }
+
+  test("footer schema merge raises on a field seen with two types") {
+    val dir = tmpDir()
+    spark.range(2).selectExpr("id", "CAST(id AS STRING) AS a")
+      .write.parquet(s"$dir/one")
+    spark.range(2).selectExpr("id", "id AS a").write.parquet(s"$dir/two")
+    val e = intercept[graft.core.SchemaChangedException] {
+      graft.core.ParquetFooter.mergedSchema(spark, dir)
+    }
+    assert(e.getMessage.contains("field a"))
+  }
+
   test("add_record_metadata stamps the _sdc_* lineage columns") {
     val out = tmpDir()
     SingerLoader.loadFile(spark, writeFixture(Seq(

@@ -145,9 +145,6 @@ class PlanGuardSpec extends AnyFunSuite {
     // crossed onto the bounded k x d grid / 1-row JT mass
     "q178_anderson_darling" -> "1-row total x bounded k x d grid",
     "q179_jonckheere" -> "1-row moment aggregates x 1-row JT mass",
-    // the 1-row x-side moment aggregate crossed onto the 1-row y-side
-    // moment aggregate (the y-grain fold keeps both sides single-row)
-    "q140_spearman" -> "1-row x moments x 1-row y moments",
     // the bounded per-label corpus counts joined as the ideal-set size:
     // sim_knn_label's broadcast corpus shape over the vec_id < 50 queries
     "sim_rank_eval" -> "bounded query set x per-label corpus counts")

@@ -29,6 +29,35 @@ class Round11OpsSpec extends AnyFunSuite {
     val tied = Seq((1.0, 1.0), (2.0, 2.0), (2.0, 3.0), (3.0, 4.0))
       .toDF("x", "y")
     assert(Stats.spearman(tied, "x", "y").head().getDouble(1) === 0.948683)
+    val none = Stats.spearman(tied.filter(col("x") > 9.0), "x", "y").head()
+    assert(none.getLong(0) === 0L && none.isNullAt(1))
+  }
+
+  test("spearman past the small-input bound (sharded y ranks) matches a driver reference") {
+    val n = graft.operators.GlobalRank.SmallInput.toInt + 9000
+    val xs = Array.tabulate(n)(i => (i % 50).toDouble)
+    val ys = Array.tabulate(n)(i => ((i.toLong * 7919L + (i % 50) * 1000L) % 100003L).toDouble)
+    def midranks(v: Array[Double]): Array[Double] = {
+      val order = v.indices.sortBy(v(_)).toArray
+      val r = new Array[Double](v.length)
+      var i = 0
+      while (i < order.length) {
+        var j = i
+        while (j + 1 < order.length && v(order(j + 1)) == v(order(i))) j += 1
+        for (k <- i to j) r(order(k)) = (i + j) / 2.0 + 1
+        i = j + 1
+      }
+      r
+    }
+    val (a, b) = (midranks(xs), midranks(ys))
+    val (ma, mb) = (a.sum / n, b.sum / n)
+    val cov = a.indices.map(i => (a(i) - ma) * (b(i) - mb)).sum
+    val expected = cov / math.sqrt(a.map(x => (x - ma) * (x - ma)).sum *
+      b.map(y => (y - mb) * (y - mb)).sum)
+    val df = xs.zip(ys).toSeq.toDF("x", "y")
+    val got = Stats.spearman(df, "x", "y", xScale = 1.0, yScale = 1.0).head()
+    assert(got.getLong(0) === n.toLong)
+    assert(math.abs(got.getDouble(1) - expected) < 1e-6)
   }
 
   // ---- Stats.aucScore ---------------------------------------------------
@@ -220,6 +249,55 @@ class Round11OpsSpec extends AnyFunSuite {
     val dm = d.as[(Long, Long)].collect().toMap
     d.unpersist()
     assert(dm === Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+  }
+
+  test("scc matches a naive reachability reference on 50 seeded digraphs") {
+    import graft.operators.Graph
+    val rnd = new scala.util.Random(20261019L)
+    // graph g: ids g·10⁶ + a sparse random id (so the smallest id is not the
+    // first seen); self-loops, duplicate edges, DAGs and one long cycle
+    val graphs: Seq[Seq[(Long, Long)]] = (0 until 50).map { g =>
+      val base = g * 1000000L
+      val k = 1 + rnd.nextInt(12)
+      val ids = Array.fill(k)(base + rnd.nextInt(900000)).distinct
+      val m = ids.length
+      g % 10 match {
+        case 0 => // DAG: edges only forward in a random order
+          val p = rnd.shuffle(ids.toSeq)
+          for (i <- 0 until m; j <- i + 1 until m if rnd.nextInt(3) == 0)
+            yield (p(i), p(j))
+        case 1 => // one long cycle through every node, listed shuffled
+          rnd.shuffle((0 until m).map(i => (ids(i), ids((i + 1) % m))))
+        case _ =>
+          val es = Seq.fill(rnd.nextInt(3 * m + 1))(
+            (ids(rnd.nextInt(m)), ids(rnd.nextInt(m))))
+          es ++ es.take(2) ++ (if (g % 3 == 0) Seq((ids(0), ids(0))) else Nil)
+      }
+    } :+ (0 until 200).map(i => (7000000000L + i, 7000000000L + (i + 1) % 200))
+    def reference(es: Seq[(Long, Long)]): Map[Long, Long] = {
+      val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
+      val adj = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+      def reach(v: Long): Set[Long] = {
+        var seen = Set(v); var todo = List(v)
+        while (todo.nonEmpty) {
+          val u = todo.head; todo = todo.tail
+          adj.getOrElse(u, Nil).filterNot(seen).foreach { w =>
+            seen += w; todo ::= w }
+        }
+        seen
+      }
+      val r = nodes.map(v => v -> reach(v)).toMap
+      nodes.map(v => v -> r(v).filter(u => r(u)(v)).min).toMap
+    }
+    val edges = graphs.flatten
+    val got = Graph.scc(edges.toDF("src", "dst"))
+    val m = got.as[(Long, Long)].collect().toMap
+    got.unpersist()
+    assert(m.size === edges.flatMap(e => Seq(e._1, e._2)).distinct.size)
+    for ((es, g) <- graphs.zipWithIndex) {
+      val want = reference(es)
+      assert(want.forall { case (v, l) => m(v) == l }, s"graph $g: $es")
+    }
   }
 
   test("scc refuses past the node bound") {

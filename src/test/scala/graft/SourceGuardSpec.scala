@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the cross-cutting helpers in their one home each. Sessions are
   * built and confs are set/restored only in `GraftSession.scala`;
-  * `Checkpoints.finalized` and `Tables.spread` have no private copies. */
+  * `Checkpoints.finalized`, `Tables.spread` and `ParquetFooter.footerSchema`
+  * have no private copies. */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -47,5 +48,10 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(hits("def spreadSmallScan") === Nil)
     for (w <- Seq("withAqeOff", "withShufflePartitions", "withAdvisoryPartitionSize"))
       assert(hits(s"def $w") === Nil, w)
+  }
+
+  test("one footerSchema, in ParquetFooter") {
+    assert(hits("def footerSchema").map(_.takeWhile(_ != ':')) ===
+      Seq("graft/core/ParquetFooter.scala"))
   }
 }

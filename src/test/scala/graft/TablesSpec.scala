@@ -54,4 +54,20 @@ class TablesSpec extends AnyFunSuite {
     // unix_micros is the canonical event-time consumer that threw in r8
     assert(ev.select(unix_micros(col("ts"))).first().getLong(0) > 0L)
   }
+
+  test("t reads each table with its footer schema, equal to Spark's inference") {
+    val dir = "/root/testdata/sf0.001"
+    val tables = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
+    assert(tables.length === 10)
+    for (name <- tables) {
+      val inferred = spark.read.parquet(s"$dir/$name.parquet")
+      val t = Tables.t(spark, dir, name)
+      assert(t.schema === inferred.schema, name)
+      assert(t.count() === inferred.count(), name)
+    }
+    val ev = Tables.events(spark, dir)
+    assert(ev.schema("ts").dataType === TimestampType)
+    assert(ev.select(unix_micros(col("ts"))).first().getLong(0) > 0L)
+  }
 }
