@@ -1,7 +1,8 @@
 package graft.core
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
@@ -12,22 +13,28 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * that opens the footers); handing the footer schema to
   * `spark.read.schema(...)` gives the same `StructType` with no job. The
   * query tables ([[graft.queries.Tables.t]]), the compaction preload and the
-  * version purge all read through here. */
+  * version purge (which also reads the row-group statistics) all read
+  * through here. */
 object ParquetFooter {
+
+  /** The footer of one parquet file: its schema and its row groups with
+    * their column statistics. */
+  def footer(spark: SparkSession, status: FileStatus): ParquetMetadata = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status,
+      spark.sparkContext.hadoopConfiguration))
+    try reader.getFooter finally reader.close()
+  }
 
   /** The Spark schema of one parquet file, from its footer alone: the
     * schema Spark stored under `org.apache.spark.sql.parquet.row.metadata`
     * when it wrote the file, else the parquet schema converted by
     * `ParquetToSparkSchemaConverter` — the same rule (and session conf)
     * `spark.read.parquet` applies, without its schema-inference job. */
-  def footerSchema(spark: SparkSession, status: FileStatus): StructType = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status,
-      spark.sparkContext.hadoopConfiguration))
-    try ParquetFileFormat.readSchemaFromFooter(
-      new Footer(status.getPath, reader.getFooter),
+  def footerSchema(spark: SparkSession, status: FileStatus,
+      meta: Option[ParquetMetadata] = None): StructType =
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(status.getPath, meta.getOrElse(footer(spark, status))),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    finally reader.close()
-  }
 
   /** [[footerSchema]] of the single parquet file at `path`. */
   def fileSchema(spark: SparkSession, path: String): StructType = {
@@ -47,16 +54,27 @@ object ParquetFooter {
     * directory names and appends them. None when `dir` holds no file. */
   def mergedSchema(spark: SparkSession, dir: String): Option[StructType] = {
     val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    merged(spark, dataFiles(root.getFileSystem(
+      spark.sparkContext.hadoopConfiguration), root).map(footerSchema(spark, _)))
+  }
+
+  /** The parquet data files under `dir` as Spark's file index lists them:
+    * partition subdirectories included, names starting with `_` or `.`
+    * skipped; sorted by path. Empty when `dir` is missing. */
+  def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] = {
     def hidden(p: Path) = p.getName.startsWith("_") || p.getName.startsWith(".")
     def files(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
       .filterNot(s => hidden(s.getPath))
       .flatMap(s => if (s.isDirectory) files(s.getPath) else Seq(s))
-    val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
-    files(root).filter(_.getPath.getName.endsWith(".parquet"))
+    if (!fs.exists(dir)) Seq.empty
+    else files(dir).filter(_.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.toString)
-      .map(footerSchema(spark, _))
-      .reduceOption(merge(_, _, caseSensitive))
+  }
+
+  /** File schemas (in path order) merged as [[mergedSchema]] merges them. */
+  def merged(spark: SparkSession, schemas: Seq[StructType]): Option[StructType] = {
+    val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
+    schemas.reduceOption(merge(_, _, caseSensitive))
   }
 
   /** Spark's parquet schema merge: `a`'s fields in order (nullable if

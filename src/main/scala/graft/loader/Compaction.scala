@@ -8,8 +8,8 @@ import graft.core.{CanNotUploadFileException, ParquetFooter, SchemaChangedExcept
 /** HDFS small-file compaction policy: when a stream flushes, instead of
   * always creating a new file, the most recent file in the stream dir is
   * append-candidates if it is still smaller than the block-size cutoff; the
-  * flush then union-rewrites it (there is no parquet append) and atomically
-  * replaces it via a staged `_new` + rename.
+  * flush then union-rewrites it (there is no parquet append), staged and
+  * renamed onto it by the sync's journaled commit ([[ParquetSink]]).
   *
   * Behavior mirrors the reference policy (reference:
   * target_hdfs/utils/hdfs.py:76-117 listing/selection/admission,
@@ -80,42 +80,24 @@ object Compaction {
     }
   }
 
-  /** Write `df` as exactly ONE parquet file at `target`: stage into
-    * `{target}_new_tmp/`, then rename the single part file over `target`
-    * (last-writer-wins replace, like the reference's `_new` + `hdfs.move`,
-    * reference utils/hdfs.py:56-73). `coalesce(1)` structurally guarantees
-    * the reference's single-append invariant.
-    *
-    * Failure safety: delete/rename return values are CHECKED — on any
-    * failure the staged file (which holds the union of old+new rows) is
-    * left in place and an exception raised, so committed data is never
-    * silently lost. Like the reference's delete+move pair, the window
-    * between delete and rename is not atomic; a crash there leaves the
-    * staged copy recoverable under `_new_tmp`.
-    *
-    * The staging dir is private to this write and only replaces `target`
-    * after the write succeeds, so it commits with the v2 file committer
-    * (tasks commit straight into it: no job-level rename pass) and without
-    * a `_SUCCESS` marker — fewer renames and listings per flush. */
-  def writeSingleFile(spark: SparkSession, df: DataFrame, target: Path,
-      compression: String): Unit = {
-    val hfs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(target.getParent, target.getName + "_new_tmp")
-    df.coalesce(1).write.mode("overwrite")
-      .option("compression", compression)
-      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(staging.toString)
-    val parts = hfs.listStatus(staging)
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-    require(parts.length == 1,
-      s"expected exactly one staged part file, found ${parts.length}")
-    if (hfs.exists(target) && !hfs.delete(target, false))
-      throw new CanNotUploadFileException(
-        s"could not delete $target before replace; staged data kept at $staging")
-    if (!hfs.rename(parts.head.getPath, target))
-      throw new CanNotUploadFileException(
-        s"rename ${parts.head.getPath} -> $target failed; staged data kept at $staging")
-    hfs.delete(staging, true)
-  }
+  /** Leftovers of the per-file staging the compaction rewrite used to
+    * commit with: `<file>_new_tmp/` held the single staged part file, the
+    * target was deleted and the part renamed onto it. A crash between the
+    * two left the target missing: it is restored from the staged part
+    * (that sync never echoed its STATE, so the tap replays it). Any other
+    * `_new_tmp` dir is stale and removed. */
+  def recoverLegacy(fs: FileSystem, dir: Path): Unit =
+    if (fs.exists(dir))
+      for (st <- fs.listStatus(dir) if st.isDirectory && st.getPath.getName.endsWith("_new_tmp")) {
+        val target = new Path(dir, st.getPath.getName.stripSuffix("_new_tmp"))
+        val parts = fs.listStatus(st.getPath)
+          .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+        if (!fs.exists(target) && parts.length == 1) {
+          if (!fs.rename(parts.head.getPath, target))
+            throw new CanNotUploadFileException(s"could not restore $target from ${st.getPath}")
+          System.err.println(s"[graft] restored $target from an interrupted rewrite")
+        }
+        if (!fs.delete(st.getPath, true))
+          throw new CanNotUploadFileException(s"could not remove stale ${st.getPath}")
+      }
 }

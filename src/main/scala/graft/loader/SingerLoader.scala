@@ -19,10 +19,18 @@ import graft.schema.{Flattener, JsonSchemaConverter}
   * `json_tuple` on the raw line (one parse pass, persisted so the
   * per-stream writes re-read the routed cache instead of rescanning raw
   * input), parsed with `from_json` against the stream's converted
-  * `StructType`, flattened and projected as pure Catalyst expressions, and
-  * written by the parquet writer. No per-record driver loop anywhere:
-  * parallelism is the number of input splits, and the only shuffles are the
-  * two small aggregates and the optional repartition by `partition_cols`.
+  * `StructType`, flattened and projected as pure Catalyst expressions.
+  * Every stream's output files — compaction rewrites, fresh files, and the
+  * ACTIVATE_VERSION purge folded into the stream's own write — are then
+  * planned on the driver ([[ParquetSink.plan]]) and written by ONE Spark
+  * job, one task per file, and committed by ONE journaled commit
+  * ([[ParquetSink.commit]]; the class doc there has the protocol). A sync
+  * is the control pass, the validation aggregate and that write job; a
+  * journal a crashed sync left is rolled forward or back first
+  * ([[ParquetSink.recover]]). The STATE is returned only after the commit.
+  * No per-record driver loop anywhere: parallelism is the number of input
+  * splits, and the only shuffles are the two small aggregates and the
+  * optional repartition by `partition_cols`.
   *
   * Protocol strictness (singer-sdk parity): lines without a `type`, RECORDs
   * without a payload, RECORDs for undeclared streams, and conflicting
@@ -64,6 +72,9 @@ object SingerLoader {
     // one wall-clock stamp per load, shared by every stream (singer-sdk's
     // sync_started_at); only meaningful when add_record_metadata is on
     val syncStartedAt = new java.sql.Timestamp(System.currentTimeMillis())
+    // finish or undo a commit a crashed sync left behind, before anything
+    // reads the destination
+    ParquetSink.recover(spark, config)
     try {
       // ---- control plane: ONE grouped aggregate, ONE bounded collect ----
       val pass = controlPass(routed).collect()
@@ -79,8 +90,7 @@ object SingerLoader {
       val control = (rows("control").sortBy(_.getAs[Long]("ord")) ++ rows("state"))
         .map(r => SingerMessage.parse(r.getAs[String]("last")))
       val records = rows("record").map(r => r.getAs[String]("key") ->
-        StreamRecords(r.getAs[Long]("n"), r.getAs[Boolean]("versioned"),
-          Option(r.getAs[java.lang.Long]("max_version")).map(_.longValue))).toMap
+        StreamRecords(r.getAs[Long]("n"), r.getAs[Boolean]("versioned"))).toMap
 
       val schemas = scala.collection.mutable.LinkedHashMap.empty[String, SchemaMessage]
       knownSchemas.foreach { case (k, v) => schemas(k) = v }
@@ -112,7 +122,7 @@ object SingerLoader {
         throw new InvalidConfigException(
           s"RECORD messages for streams with no SCHEMA: ${orphan.mkString(", ")}")
       def recordsOf(stream: String) =
-        records.getOrElse(stream, StreamRecords(0L, versioned = false, None))
+        records.getOrElse(stream, StreamRecords(0L, versioned = false))
 
       // stream-level stream maps resolve each input stream to its output
       // name (aliasing) or to suppression (`__NULL__` / `__else__`
@@ -131,11 +141,17 @@ object SingerLoader {
       if (config.validateRecords)
         validate(routed, toWrite.collect { case (sm, _, recs, _) if recs.n > 0 => sm })
 
-      // ---- record plane: fully distributed per stream ----
-      // the version each stream's just-committed rows are known to reach,
-      // which lets ACTIVATE_VERSION skip its emptiness job
-      val committedVersion = scala.collection.mutable.Map.empty[String, Long]
-      toWrite.foreach { case (sm, outStream, recs, batchFiles) =>
+      // ACTIVATE_VERSION, resolved through the same stream-level maps (an
+      // aliased stream's data lives under its output name; a suppressed
+      // stream has none). Several in one batch keep the rows at or above
+      // the largest.
+      val acts = activates.result()
+      val activated = acts.flatMap(av => config.resolveStream(av.stream).map(_ -> av.version))
+        .groupMapReduce(_._1)(_._2)(math.max)
+
+      // ---- record plane: fully distributed per stream, planned here and
+      // written by ONE staged job and ONE journaled commit for the sync ----
+      val writes = toWrite.map { case (sm, outStream, recs, batchFiles) =>
         val nested = JsonSchemaConverter.toStructType(sm.schemaJson)
         val inline = routed
           .filter(col("t") === "RECORD" && col("stream") === sm.stream)
@@ -189,27 +205,23 @@ object SingerLoader {
             extraCols.map { case (n, c) => c.as(n) }: _*)
           .select(recordFields ++ extraCols.map(p => col(p._1)): _*)
         val transformed = transform(parsed, sm.stream, config)
-        // only a `__filter__` or BATCH files the driver has not counted
-        // can leave the batch empty; those pay one emptiness job
+        // only a `__filter__` or BATCH files the driver has not counted can
+        // leave the batch empty: the staged write then writes no file, and
+        // only the append path pays an emptiness job
         val filtered =
           config.streamProperties(sm.stream).get(StreamMaps.FilterKey).flatten.isDefined
-        if (!((filtered || recs.n == 0) && transformed.isEmpty)) {
-          new ParquetSink(spark, config, outStream, transformed.schema)
-            .write(transformed)
-          if (!filtered) recs.maxVersion.foreach(committedVersion(outStream) = _)
-        }
+        (outStream, transformed, filtered || recs.n == 0)
       }
-
-      // ACTIVATE_VERSION: after the batch's records are committed, purge
-      // rows of superseded versions from each activated stream dir —
-      // resolved through the same stream-level maps (an aliased stream's
-      // data lives under its output name; a suppressed stream has none)
-      val acts = activates.result()
-      acts.foreach { av =>
-        config.resolveStream(av.stream).foreach(out =>
-          VersionPurge.activate(spark, config, out, av.version,
-            committedVersion.get(out)))
+      // input streams aliased onto one output name write one batch; a
+      // stream activated with no rows in this batch still purges
+      val byOutput = writes.groupBy(_._1)
+      val plans = (writes.map(_._1).distinct ++ activated.keys.toSeq.sorted).distinct.map { out =>
+        val parts = byOutput.getOrElse(out, Nil)
+        new ParquetSink(spark, config, out).plan(
+          parts.map(_._2).reduceOption(_ unionByName _), activated.get(out),
+          parts.exists(_._3))
       }
+      ParquetSink.commit(spark, config, plans)
 
       // Singer-SDK-style per-stream record counters (inline RECORDs this
       // batch carried), read off the control pass — no extra Spark job
@@ -222,11 +234,10 @@ object SingerLoader {
     } finally routed.unpersist()
   }
 
-  /** Per-stream inline RECORD facts from the control pass: how many, whether
-    * any carries a message-level `version` (full-table replication), and the
-    * largest such version. */
-  private final case class StreamRecords(n: Long, versioned: Boolean,
-      maxVersion: Option[Long])
+  /** Per-stream inline RECORD facts from the control pass: how many, and
+    * whether any carries a message-level `version` (full-table
+    * replication). */
+  private final case class StreamRecords(n: Long, versioned: Boolean)
 
   private val KnownTypes = Seq("RECORD", "SCHEMA", "STATE", "ACTIVATE_VERSION", "BATCH")
 
@@ -245,8 +256,8 @@ object SingerLoader {
     * grouped by (`kind`, `key`):
     *  - `untyped` / `null_record` (key NULL) and `unknown` (key = the type):
     *    protocol violations, carried with an example line;
-    *  - `record` (key = stream): per-stream count, whether any RECORD carries
-    *    a `version`, and the largest version;
+    *  - `record` (key = stream): per-stream count and whether any RECORD
+    *    carries a `version`;
     *  - `state` (key NULL): the LAST STATE in input order —
     *    `monotonically_increasing_id` follows the partition order that
     *    already defines this batch's "last STATE wins" semantics (see the
@@ -280,8 +291,7 @@ object SingerLoader {
         // records never need their line back: keep it out of the collect
         max_by(when(col("kind") =!= "record", col("value")), col("ord")).as("last"),
         count(lit(1)).as("n"),
-        max(col("version").isNotNull).as("versioned"),
-        max(expr("try_cast(version AS BIGINT)")).as("max_version"))
+        max(col("version").isNotNull).as("versioned"))
   }
 
   /** JSON-Schema record validation (singer-sdk parity, reference standard

@@ -1,9 +1,13 @@
 package graft.loader
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import graft.core.{CanNotUploadFileException, GraftConfig, ParquetFooter}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.column.statistics.LongStatistics
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
+import graft.core.{CanNotUploadFileException, ParquetFooter}
 
 /** ACTIVATE_VERSION semantics (singer-sdk inherited behavior; the reference
   * receives the message through the same loop, reference target_hdfs/
@@ -13,18 +17,29 @@ import graft.core.{CanNotUploadFileException, GraftConfig, ParquetFooter}
   * removed from the target.
   *
   * Loader contract here: [[SingerLoader]] stamps `_sdc_table_version` on
-  * record batches whose messages carry a version; `activate` rewrites the
-  * stream dir keeping only rows with `_sdc_table_version >= version` or a
-  * NULL stamp (rows never stamped were never part of versioned replication
-  * — deleting them on a version bump would destroy data, so they are kept,
-  * conservatively).
+  * record batches whose messages carry a version; a stream activated at
+  * `v` keeps only rows with `_sdc_table_version >= v` or a NULL stamp (rows
+  * never stamped were never part of versioned replication — deleting them
+  * on a version bump would destroy data, so they are kept, conservatively).
   *
-  * Scale shape: one distributed filter-rewrite job over the stream dir
-  * (the driver reads only each file's footer, for the merged schema), staged into a sibling tmp dir and swapped by
-  * two directory renames — same staged-rename commit the per-file
-  * compaction uses (reference utils/hdfs.py:56-73). On object stores the
-  * rename window is the usual non-atomic caveat; the old data stays
-  * recoverable under `__purge_old` until the final delete.
+  * The purge is folded into the sync's own staged write and journaled
+  * commit ([[ParquetSink]]): no job of its own and no directory swap.
+  * [[plan]] decides each file already in the stream dir (partition
+  * subdirectories included) from its footer's row-group statistics alone:
+  *  - [[Drop]]: every stamp below `v`, no NULL — deleted at commit, never read;
+  *  - [[Keep]]: every stamp NULL or at or above `v` — left untouched;
+  *  - [[Rewrite]]: straddles `v`, has no statistics, or lacks the stamp
+  *    column (a file written before versioned replication began) — one more
+  *    task of the sync's write job rewrites its [[kept]] rows in place, under
+  *    the stream's merged footer schema, so every file of a purged stream
+  *    carries the stamp column.
+  * The batch itself is filtered by [[kept]] before it is written. When
+  * every file is dropped and the batch leaves nothing, the commit removes
+  * the stream dir (missing dir == empty stream everywhere in the loader).
+  *
+  * The purge this replaced swapped the whole stream dir through two
+  * sibling directories; [[recoverLegacy]] restores or removes what a crash
+  * of that swap left behind.
   */
 object VersionPurge {
 
@@ -42,66 +57,76 @@ object VersionPurge {
     * config between syncs must never read as schema drift. */
   def isLoaderInternal(name: String): Boolean = name.startsWith("_sdc_")
 
-  /** @param committedVersion a version this load has just committed rows of
-    *                         into the stream dir, if known: at or above
-    *                         `version`, some row survives, so the emptiness
-    *                         job is skipped */
-  def activate(spark: SparkSession, config: GraftConfig, stream: String,
-      version: Long, committedVersion: Option[Long] = None): Unit = {
-    val dir = config.streamDir(stream)
-    val hfs = Compaction.fs(spark, dir)
-    val dirPath = new Path(dir)
-    if (!hfs.exists(dirPath)) return // nothing loaded yet — activate is a no-op
+  sealed trait Fate
+  case object Keep extends Fate
+  case object Drop extends Fate
+  case object Rewrite extends Fate
 
-    // files written before versioned replication began lack the stamp
-    // column; under the merged schema (built from the footers, so no
-    // inference job) their rows read it as NULL and are kept
-    val merged = ParquetFooter.mergedSchema(spark, dir).getOrElse(return)
-    if (!merged.fieldNames.contains(SdcTableVersionCol)) return
-    val df = spark.read.schema(merged).parquet(dir)
+  /** ACTIVATE_VERSION(`version`) over one stream dir: each data file's
+    * [[Fate]], and the merged footer schema a [[Rewrite]] is read with. */
+  final case class Purge(version: Long, fates: Seq[(FileStatus, Fate)],
+      schema: StructType) {
+    def fateOf(p: Path): Fate =
+      fates.collectFirst { case (s, f) if s.getPath == p => f }.getOrElse(Keep)
+    def drops: Seq[Path] = fates.collect { case (s, Drop) => s.getPath }
+    def rewrites: Seq[Path] = fates.collect { case (s, Rewrite) => s.getPath }
+    /** Every file of the dir is dropped. */
+    def dropsAll: Boolean = fates.forall(_._2 == Drop)
+  }
 
-    val keep = df.filter(
-      col(SdcTableVersionCol).isNull || col(SdcTableVersionCol) >= version)
+  /** The rows of `df` that survive ACTIVATE_VERSION(`version`). */
+  def kept(df: DataFrame, version: Long): DataFrame =
+    if (!df.columns.contains(SdcTableVersionCol)) df
+    else df.filter(col(SdcTableVersionCol).isNull || col(SdcTableVersionCol) >= version)
 
-    val tmp = new Path(dirPath.getParent, dirPath.getName + "__purge_tmp")
-    val old = new Path(dirPath.getParent, dirPath.getName + "__purge_old")
+  /** The purge of `dir` at `version`, from the footers alone. None when
+    * there is nothing to purge: no data file, or no file carries the stamp
+    * column (every row reads it as NULL and is kept). */
+  def plan(spark: SparkSession, dir: Path, version: Long): Option[Purge] = {
+    val files = ParquetFooter.dataFiles(
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
+    val footers = files.map(s => s -> ParquetFooter.footer(spark, s))
+    ParquetFooter.merged(spark,
+      footers.map { case (s, m) => ParquetFooter.footerSchema(spark, s, Some(m)) })
+      .filter(_.fieldNames.contains(SdcTableVersionCol))
+      .map(schema => Purge(version,
+        footers.map { case (s, m) => s -> fate(m, version) }, schema))
+  }
 
-    if (!committedVersion.exists(_ >= version) && keep.isEmpty) {
-      // nothing survives: a rewrite would commit a data-file-less dir that
-      // breaks schema inference on the next read — remove the stream dir
-      // instead (missing dir == empty stream everywhere in the loader),
-      // staged through the same rename so a crash never loses the original
-      if (hfs.exists(old) && !hfs.delete(old, true))
-        throw new CanNotUploadFileException(s"could not clear stale $old")
-      if (!hfs.rename(dirPath, old))
-        throw new CanNotUploadFileException(s"rename $dirPath -> $old failed")
-      if (!hfs.delete(old, true))
-        System.err.println(s"[activate] WARN: could not delete $old (superseded data left behind)")
-      return
+  /** A file's fate from the stamp column's statistics over its row groups:
+    * a missing column or unusable statistics read as [[Rewrite]]. */
+  private def fate(meta: ParquetMetadata, version: Long): Fate = {
+    val chunks = meta.getBlocks.asScala.toSeq.map(b => b.getRowCount -> b.getColumns.asScala
+      .find(_.getPath.toDotString == SdcTableVersionCol).map(_.getStatistics))
+    val stats = chunks.collect {
+      case (rows, Some(s: LongStatistics)) if s.isNumNullsSet => (rows, s)
     }
+    if (stats.size < chunks.size) return Rewrite
+    val nulls = stats.map(_._2.getNumNulls).sum
+    val valued = stats.map(_._2).filter(_.hasNonNullValue)
+    if (nulls == stats.map(_._1).sum) Keep
+    else if (nulls == 0 && valued.forall(_.getMax < version)) Drop
+    else if (valued.forall(_.getMin >= version)) Keep
+    else Rewrite
+  }
 
-    // the filter inherits one partition per input split; without coalesce the
-    // rewrite would explode a compacted single-file dir into one file per
-    // partition — keep the output file count bounded by the input's
-    val keepCoalesced = keep.coalesce(math.max(1, df.inputFiles.length))
-    var w = keepCoalesced.write.mode("overwrite")
-      .option("compression", config.compressionMethod)
-    if (config.partitionCols.nonEmpty) w = w.partitionBy(config.partitionCols: _*)
-    if (config.maxRecordsPerFile > 0)
-      w = w.option("maxRecordsPerFile", config.maxRecordsPerFile)
-    w.parquet(tmp.toString)
-
-    if (hfs.exists(old) && !hfs.delete(old, true))
-      throw new CanNotUploadFileException(s"could not clear stale $old")
-    if (!hfs.rename(dirPath, old))
-      throw new CanNotUploadFileException(
-        s"rename $dirPath -> $old failed; purged data staged at $tmp")
-    if (!hfs.rename(tmp, dirPath)) {
-      hfs.rename(old, dirPath) // restore; best-effort — tmp still holds the rewrite
-      throw new CanNotUploadFileException(
-        s"rename $tmp -> $dirPath failed; original restored, rewrite kept at $tmp")
+  /** Leftovers of the directory swap the purge used to commit with: it
+    * staged the rewrite in `<stream>__purge_tmp`, renamed the stream dir to
+    * `<stream>__purge_old`, renamed the rewrite into place and deleted the
+    * old dir. A crash between the two renames left the stream dir missing:
+    * it is restored from `__purge_old` (that sync never echoed its STATE,
+    * so the tap replays it and its ACTIVATE_VERSION purges again). Any
+    * other leftover is stale and removed. */
+  def recoverLegacy(fs: FileSystem, dir: Path): Unit = {
+    val Seq(tmp, old) = Seq("__purge_tmp", "__purge_old")
+      .map(s => new Path(dir.getParent, dir.getName + s))
+    if (fs.exists(old) && !fs.exists(dir)) {
+      if (!fs.rename(old, dir))
+        throw new CanNotUploadFileException(s"could not restore $dir from $old")
+      System.err.println(s"[graft] restored $dir from an interrupted purge")
     }
-    if (!hfs.delete(old, true))
-      System.err.println(s"[activate] WARN: could not delete $old (superseded data left behind)")
+    for (p <- Seq(tmp, old) if fs.exists(p))
+      if (!fs.delete(p, true))
+        throw new CanNotUploadFileException(s"could not remove stale $p")
   }
 }

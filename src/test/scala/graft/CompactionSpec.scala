@@ -25,7 +25,7 @@ class CompactionSpec extends AnyFunSuite {
   def seeded(): String = {
     val dir = Files.createTempDirectory("graft-compact").toString + "/t"
     val sink = new ParquetSink(spark,
-      GraftConfig(hdfsDestinationPath = dir.stripSuffix("/t")), "t", schema)
+      GraftConfig(hdfsDestinationPath = dir.stripSuffix("/t")), "t")
     sink.write(mkDf((1, "a", true), (2, "b", false)))
     dir
   }
@@ -61,7 +61,7 @@ class CompactionSpec extends AnyFunSuite {
   test("compacting flushes union-rewrite into a single growing file") {
     val root = Files.createTempDirectory("graft-compact2").toString
     val cfg = GraftConfig(hdfsDestinationPath = root)
-    val sink = new ParquetSink(spark, cfg, "t", schema)
+    val sink = new ParquetSink(spark, cfg, "t")
     sink.write(mkDf((1, "a", true)))
     sink.write(mkDf((2, "b", false)))
     sink.write(mkDf((3, "c", true)))
@@ -75,7 +75,7 @@ class CompactionSpec extends AnyFunSuite {
   test("skip_existing_files disables compaction (new file per flush)") {
     val root = Files.createTempDirectory("graft-compact3").toString
     val cfg = GraftConfig(hdfsDestinationPath = root, skipExistingFiles = true)
-    val sink = new ParquetSink(spark, cfg, "t", schema)
+    val sink = new ParquetSink(spark, cfg, "t")
     sink.write(mkDf((1, "a", true)))
     sink.write(mkDf((2, "b", false)))
     val fs = Compaction.fs(spark, s"$root/t")
@@ -90,7 +90,7 @@ class CompactionSpec extends AnyFunSuite {
     for (codec <- Seq("gzip", "snappy", "zstd")) {
       val root = Files.createTempDirectory(s"graft-codec-$codec").toString
       val sink = new ParquetSink(spark,
-        GraftConfig(hdfsDestinationPath = root, compressionMethod = codec), "t", schema)
+        GraftConfig(hdfsDestinationPath = root, compressionMethod = codec), "t")
       sink.write(mkDf((1, "a", true)))
       assert(spark.read.parquet(s"$root/t").count() === 1, codec)
     }
@@ -119,7 +119,7 @@ class CompactionSpec extends AnyFunSuite {
       Row(java.sql.Timestamp.valueOf("2024-01-02 03:04:05.123456"), 1.5, true,
         "a", 7L, java.sql.Timestamp.valueOf("2024-01-02 03:04:06")),
       Row(null, null, null, null, null, null)), 1), wide)
-    new ParquetSink(spark, GraftConfig(hdfsDestinationPath = root), "t", wide)
+    new ParquetSink(spark, GraftConfig(hdfsDestinationPath = root), "t")
       .write(df)
     val fs = Compaction.fs(spark, s"$root/t")
     val file = Compaction.mostRecentFile(fs, s"$root/t").get

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types._
 import graft.core.{GraftConfig, StreamMapSpec}
@@ -494,6 +495,30 @@ class LoaderSpec extends AnyFunSuite {
       .collect().sorted.toSeq === Seq(1L, 3L))
   }
 
+  test("ACTIVATE_VERSION decides each file from its footer: rewrite, keep or delete") {
+    val out = tmpDir()
+    val cfg = GraftConfig(hdfsDestinationPath = out, skipExistingFiles = true)
+    def rec(id: Int, v: Int) =
+      s"""{"type": "RECORD", "stream": "v", "record": {"id": $id}, "version": $v}"""
+    def files = new java.io.File(s"$out/v").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.lastModified).toMap
+    SingerLoader.loadFile(spark, writeFixture(Seq(versionedSchema, rec(1, 1), rec(2, 2))), cfg)
+    val straddling = files.keySet
+    SingerLoader.loadFile(spark, writeFixture(Seq(versionedSchema, rec(3, 2))), cfg)
+    val above = files.keySet -- straddling
+    SingerLoader.loadFile(spark, writeFixture(Seq(versionedSchema, rec(5, 1))), cfg)
+    val below = files.keySet -- straddling -- above
+    val before = files
+    SingerLoader.loadFile(spark, writeFixture(Seq(versionedSchema,
+      """{"type": "ACTIVATE_VERSION", "stream": "v", "version": 2}""")), cfg)
+    val after = files
+    assert(after.keySet === straddling ++ above)              // below: deleted
+    assert(above.forall(f => after(f) == before(f)))          // untouched
+    assert(spark.read.parquet(s"$out/v/${straddling.head}").count() === 1) // rewritten
+    assert(spark.read.parquet(s"$out/v").select("id").as[Long](
+      org.apache.spark.sql.Encoders.scalaLong).collect().sorted.toSeq === Seq(2L, 3L))
+  }
+
   test("footer schema merge raises on a field seen with two types") {
     val dir = tmpDir()
     spark.range(2).selectExpr("id", "CAST(id AS STRING) AS a")
@@ -754,5 +779,85 @@ class LoaderSpec extends AnyFunSuite {
     assert(metrics === Seq(
       """METRIC: {"type": "counter", "metric": "record_count", "value": 3, "tags": {"stream": "t"}}""",
       """METRIC: {"type": "counter", "metric": "record_count", "value": 0, "tags": {"stream": "e\"mpty"}}"""))
+  }
+  // ---- leftovers of the per-stream commit the journal replaced -----------
+
+  private def ids(dir: String): Seq[Long] =
+    spark.read.parquet(dir).select("col1").as[Long](
+      org.apache.spark.sql.Encoders.scalaLong).collect().sorted.toSeq
+  private val record4 =
+    """{"type": "RECORD", "stream": "t", "record": {"col1": 4, "col2": "d", "col3": true}}"""
+  private def leftoverNames(out: String): Seq[String] =
+    Files.walk(java.nio.file.Paths.get(out)).iterator.asScala.map(_.getFileName.toString)
+      .filter(n => n.contains("__purge_") || n.contains("_new_tmp") || n == "_graft_sync")
+      .toSeq
+
+  test("a stream dir lost in the old purge's rename window is restored from __purge_old") {
+    val out = tmpDir()
+    val cfg = GraftConfig(hdfsDestinationPath = out)
+    SingerLoader.loadFile(spark, writeFixture(fixture), cfg)
+    // the crash window: the dir renamed away, its rewrite staged, not yet renamed in
+    Files.move(java.nio.file.Paths.get(s"$out/t"), java.nio.file.Paths.get(s"$out/t__purge_old"))
+    Files.createDirectories(java.nio.file.Paths.get(s"$out/t__purge_tmp"))
+    SingerLoader.loadFile(spark, writeFixture(Seq(fixture.head, record4)), cfg)
+    assert(ids(s"$out/t") === Seq(1L, 2L, 3L, 4L))
+    assert(leftoverNames(out) === Nil)
+  }
+
+  test("stale __purge_tmp and __purge_old next to a present stream dir are removed") {
+    val out = tmpDir()
+    val cfg = GraftConfig(hdfsDestinationPath = out)
+    SingerLoader.loadFile(spark, writeFixture(fixture), cfg)
+    for (d <- Seq("t__purge_tmp", "t__purge_old")) {
+      Files.createDirectories(java.nio.file.Paths.get(s"$out/$d"))
+      Files.write(java.nio.file.Paths.get(s"$out/$d/part-0.parquet"), Array[Byte](1))
+    }
+    SingerLoader.loadFile(spark, writeFixture(Seq(fixture.head, record4)), cfg)
+    assert(ids(s"$out/t") === Seq(1L, 2L, 3L, 4L))
+    assert(leftoverNames(out) === Nil)
+  }
+
+  test("a file lost between the old compaction's delete and rename is restored from _new_tmp") {
+    val out = tmpDir()
+    val cfg = GraftConfig(hdfsDestinationPath = out)
+    SingerLoader.loadFile(spark, writeFixture(fixture), cfg)
+    val file = new java.io.File(s"$out/t").listFiles().filter(_.getName.endsWith(".parquet")).head
+    val staged = java.nio.file.Paths.get(s"${file.getPath}_new_tmp")
+    Files.createDirectories(staged)
+    Files.move(file.toPath, staged.resolve("part-00000-x.gz.parquet"))
+    SingerLoader.loadFile(spark, writeFixture(Seq(fixture.head, record4)), cfg)
+    assert(ids(s"$out/t") === Seq(1L, 2L, 3L, 4L))
+    assert(new java.io.File(s"$out/t").listFiles().count(_.getName.endsWith(".parquet")) === 1)
+    assert(leftoverNames(out) === Nil)
+  }
+
+  test("a stale _new_tmp next to its target is removed") {
+    val out = tmpDir()
+    val cfg = GraftConfig(hdfsDestinationPath = out)
+    SingerLoader.loadFile(spark, writeFixture(fixture), cfg)
+    val file = new java.io.File(s"$out/t").listFiles().filter(_.getName.endsWith(".parquet")).head
+    val staged = java.nio.file.Paths.get(s"${file.getPath}_new_tmp")
+    Files.createDirectories(staged)
+    Files.copy(file.toPath, staged.resolve("part-00000-x.gz.parquet"))
+    // a fresh file this time, so no rewrite of that target reuses the path
+    SingerLoader.loadFile(spark, writeFixture(Seq(fixture.head, record4)),
+      cfg.copy(skipExistingFiles = true))
+    assert(ids(s"$out/t") === Seq(1L, 2L, 3L, 4L))
+    assert(leftoverNames(out) === Nil)
+  }
+
+  test("a staging dir left without a journal is rolled back; no staged file outlives a sync") {
+    val out = tmpDir()
+    val cfg = GraftConfig(hdfsDestinationPath = out)
+    SingerLoader.loadFile(spark, writeFixture(fixture), cfg)
+    val staging = java.nio.file.Paths.get(s"$out/_graft_sync/1-crashed")
+    Files.createDirectories(staging)
+    val file = new java.io.File(s"$out/t").listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.copy(file.toPath, staging.resolve("part-0-1.parquet"))
+    // a torn journal: the crash struck while it was being written
+    Files.write(staging.resolve("_journal.json"), """{"moves": [{"from": """.getBytes("UTF-8"))
+    SingerLoader.loadFile(spark, writeFixture(Seq(fixture.head, record4)), cfg)
+    assert(ids(s"$out/t") === Seq(1L, 2L, 3L, 4L))
+    assert(leftoverNames(out) === Nil)
   }
 }
