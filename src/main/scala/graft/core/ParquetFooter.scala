@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -20,8 +21,12 @@ object ParquetFooter {
   /** The footer of one parquet file: its schema and its row groups with
     * their column statistics. */
   def footer(spark: SparkSession, status: FileStatus): ParquetMetadata = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status,
-      spark.sparkContext.hadoopConfiguration))
+    // read options from the session's Hadoop conf: `open(InputFile)` alone
+    // builds a fresh `Configuration` per footer (re-reading the default and
+    // site XML) and ignores the session's `parquet.*` read options
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf),
+      HadoopReadOptions.builder(conf).build())
     try reader.getFooter finally reader.close()
   }
 

@@ -1,7 +1,10 @@
 package graft.loader
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.core._
 import graft.schema.{Flattener, JsonSchemaConverter}
 
@@ -9,12 +12,15 @@ import graft.schema.{Flattener, JsonSchemaConverter}
   * pipeline: target_hdfs/target.py + sinks.py; see SURVEY §3.1).
   *
   * Control plane (SCHEMA / STATE / ACTIVATE_VERSION / BATCH — a handful
-  * of lines) is reduced by ONE grouped aggregate ([[controlPass]]) and
-  * parsed on the driver; the same pass yields the protocol checks and each
-  * stream's record count, which decide the rest of the sync without further
-  * Spark actions (no emptiness probes for streams the pass counted,
-  * `METRIC` record counters on stderr). Record validation then runs as one
-  * aggregate over every constrained stream before any stream is written.
+  * of lines) is reduced by ONE per-partition fold over the routed lines
+  * ([[controlPass]]), merged and parsed on the driver; the same pass yields
+  * the protocol checks and each stream's record count, which decide the
+  * rest of the sync without further Spark actions (no emptiness probes for
+  * streams the pass counted, `METRIC` record counters on stderr). Record
+  * validation then runs as a second fold over every constrained stream
+  * before any stream is written. Both folds are one stage each: no
+  * exchange, no sort, and the routed cache is built inside the control
+  * fold's own tasks.
   * The record plane never leaves the executors: records are routed by
   * `json_tuple` on the raw line (one parse pass, persisted so the
   * per-stream writes re-read the routed cache instead of rescanning raw
@@ -25,12 +31,12 @@ import graft.schema.{Flattener, JsonSchemaConverter}
   * planned on the driver ([[ParquetSink.plan]]) and written by ONE Spark
   * job, one task per file, and committed by ONE journaled commit
   * ([[ParquetSink.commit]]; the class doc there has the protocol). A sync
-  * is the control pass, the validation aggregate and that write job; a
+  * is the control fold, the validation fold and that write job; a
   * journal a crashed sync left is rolled forward or back first
   * ([[ParquetSink.recover]]). The STATE is returned only after the commit.
   * No per-record driver loop anywhere: parallelism is the number of input
-  * splits, and the only shuffles are the two small aggregates and the
-  * optional repartition by `partition_cols`.
+  * splits, and the only shuffle is the optional repartition by
+  * `partition_cols`.
   *
   * Protocol strictness (singer-sdk parity): lines without a `type`, RECORDs
   * without a payload, RECORDs for undeclared streams, and conflicting
@@ -76,21 +82,20 @@ object SingerLoader {
     // reads the destination
     ParquetSink.recover(spark, config)
     try {
-      // ---- control plane: ONE grouped aggregate, ONE bounded collect ----
-      val pass = controlPass(routed).collect()
-      def rows(kind: String) = pass.filter(_.getAs[String]("kind") == kind)
+      // ---- control plane: ONE partition fold, ONE bounded collect ----
+      val pass = controlPass(routed)
+      def rows(kind: String) = pass.filter(_.kind == kind)
       rows("untyped").headOption.foreach(r => throw new InvalidConfigException(
-        s"line without a Singer 'type': ${r.getAs[String]("last").take(200)}"))
+        s"line without a Singer 'type': ${r.last.take(200)}"))
       rows("null_record").headOption.foreach(r => throw new InvalidConfigException(
-        s"RECORD message without a record payload: ${r.getAs[String]("last").take(200)}"))
+        s"RECORD message without a record payload: ${r.last.take(200)}"))
       rows("unknown").headOption.foreach(r => throw new InvalidConfigException(
-        s"unknown Singer message type: ${r.getAs[String]("key")}"))
+        s"unknown Singer message type: ${r.key}"))
       // SCHEMA / ACTIVATE_VERSION / BATCH as first-seen distinct lines in
-      // input order, then the single last STATE
-      val control = (rows("control").sortBy(_.getAs[Long]("ord")) ++ rows("state"))
-        .map(r => SingerMessage.parse(r.getAs[String]("last")))
-      val records = rows("record").map(r => r.getAs[String]("key") ->
-        StreamRecords(r.getAs[Long]("n"), r.getAs[Boolean]("versioned"))).toMap
+      // input order (the pass is sorted by first position), then the single
+      // last STATE
+      val control = (rows("control") ++ rows("state")).map(r => SingerMessage.parse(r.last))
+      val records = rows("record").map(r => r.key -> StreamRecords(r.n, r.versioned)).toMap
 
       val schemas = scala.collection.mutable.LinkedHashMap.empty[String, SchemaMessage]
       knownSchemas.foreach { case (k, v) => schemas(k) = v }
@@ -239,91 +244,181 @@ object SingerLoader {
     * replication). */
   private final case class StreamRecords(n: Long, versioned: Boolean)
 
-  private val KnownTypes = Seq("RECORD", "SCHEMA", "STATE", "ACTIVATE_VERSION", "BATCH")
+  private val RecordType = UTF8String.fromString("RECORD")
+  private val StateType = UTF8String.fromString("STATE")
+  private val KnownTypes = Set(RecordType, StateType) ++
+    Seq("SCHEMA", "ACTIVATE_VERSION", "BATCH").map(UTF8String.fromString)
 
   /** The routing parse: `json_tuple` extracts every routing field from a
     * SINGLE json parse per line (separate `get_json_object` calls would each
-    * re-parse it); blank lines are dropped. */
+    * re-parse it); blank lines are dropped. The raw line is kept only where
+    * the control plane reads it — every non-RECORD line and a RECORD
+    * without a payload (its error quotes the line) — and is NULL for every
+    * other RECORD, so the routed cache holds each record payload once. */
   private[graft] def route(lines: Dataset[String]): DataFrame =
     lines.toDF("value")
-      .filter(length(trim(col("value"))) > 0)
+      .filter(octet_length(trim(col("value"))) > 0)
       .select(col("value"),
         json_tuple(col("value"), "type", "stream", "record", "version",
           "time_extracted"))
       .toDF("value", "t", "stream", "record", "version", "te")
+      .withColumn("value",
+        when(col("t") === "RECORD" && col("record").isNotNull, lit(null).cast("string"))
+          .otherwise(col("value")))
 
-  /** The whole control plane as ONE grouped aggregate over the routed lines,
-    * grouped by (`kind`, `key`):
+  /** One (`kind`, `key`) group of the control plane:
     *  - `untyped` / `null_record` (key NULL) and `unknown` (key = the type):
     *    protocol violations, carried with an example line;
     *  - `record` (key = stream): per-stream count and whether any RECORD
     *    carries a `version`;
-    *  - `state` (key NULL): the LAST STATE in input order —
-    *    `monotonically_increasing_id` follows the partition order that
-    *    already defines this batch's "last STATE wins" semantics (see the
-    *    ordering note in the class doc);
+    *  - `state` (key NULL): the LAST STATE in input order;
     *  - `control` (key = the line): SCHEMA / ACTIVATE_VERSION / BATCH as
     *    DISTINCT lines with their first position (a tap re-emitting its
-    *    SCHEMA before every record collapses to one row; in-batch conflict
+    *    SCHEMA before every record collapses to one group; in-batch conflict
     *    detection needs exactly the distinct set).
-    * A tap may emit STATE after every record (some do), so collecting
-    * control lines verbatim could OOM the driver on a large replay; this
-    * collect holds #streams + #distinct control lines + a few rows,
-    * independent of input length. */
-  private[graft] def controlPass(routed: DataFrame): DataFrame = {
-    val t = col("t")
-    val kind =
-      when(t.isNull, "untyped")
-        .when(t === "RECORD" && col("record").isNull, "null_record")
-        .when(!t.isin(KnownTypes: _*), "unknown")
-        .when(t === "RECORD", "record")
-        .when(t === "STATE", "state")
-        .otherwise("control")
-    routed
-      .select(kind.as("kind"), col("value"), col("stream"), t, col("version"),
-        monotonically_increasing_id().as("ord"))
-      .groupBy(col("kind"),
-        when(col("kind") === "record", col("stream"))
-          .when(col("kind") === "control", col("value"))
-          .when(col("kind") === "unknown", t).as("key"))
-      .agg(
-        min(col("ord")).as("ord"),
-        // records never need their line back: keep it out of the collect
-        max_by(when(col("kind") =!= "record", col("value")), col("ord")).as("last"),
-        count(lit(1)).as("n"),
-        max(col("version").isNotNull).as("versioned"))
+    * `ord` and `lastOrd` are the group's first and last position, `last` the
+    * line at `lastOrd` (NULL for `record`: records never need their line
+    * back), `n` its line count. */
+  private[graft] final case class ControlGroup(kind: String, key: String,
+      ord: Long, lastOrd: Long, last: String, n: Long, versioned: Boolean) {
+    def merge(o: ControlGroup): ControlGroup = {
+      val later = if (o.lastOrd > lastOrd) o else this
+      ControlGroup(kind, key, math.min(ord, o.ord), later.lastOrd, later.last,
+        n + o.n, versioned || o.versioned)
+    }
   }
 
-  /** JSON-Schema record validation (singer-sdk parity, reference standard
+  /** The whole control plane as ONE Spark job over the routed lines: each
+    * partition folds its rows into [[ControlGroup]]s, and the driver merges
+    * the partial groups. A line's position is `partition << 33 | row`, the
+    * order `monotonically_increasing_id` gives, which already defines this
+    * batch's "last STATE wins" (see the ordering note in the class doc).
+    * No exchange and no sort: over the persisted routed frame the job's own
+    * tasks build the cache. A tap may emit STATE after every record (some
+    * do), so collecting control lines verbatim could OOM the driver on a
+    * large replay; every partition returns, and the result holds, #streams +
+    * #distinct control lines + a few groups, independent of input length.
+    * Sorted by first position. */
+  private[graft] def controlPass(routed: DataFrame): Seq[ControlGroup] = {
+    val cols = Seq("value", "t", "stream", "record", "version").map(routed.schema.fieldIndex)
+    routed.queryExecution.toRdd
+      .mapPartitionsWithIndex((part, rows) =>
+        Iterator.single(SingerLoader.foldControl(part, rows, cols)))
+      .collect().toSeq.flatten
+      .groupBy(g => (g.kind, g.key)).values.map(_.reduce(_ merge _))
+      .toSeq.sortBy(_.ord)
+  }
+
+  /** One partition's share of [[controlPass]]; `cols` are the positions of
+    * `value`, `t`, `stream`, `record` and `version`. Rows are reused by the
+    * scan, so every kept string is copied. */
+  private def foldControl(part: Int, rows: Iterator[InternalRow],
+      cols: Seq[Int]): Array[ControlGroup] = {
+    val Seq(value, t, stream, record, version) = cols
+    def str(r: InternalRow, i: Int) = if (r.isNullAt(i)) null else r.getUTF8String(i)
+    final class Acc(val ord: Long) {
+      var lastOrd = ord
+      var last: UTF8String = null
+      var n = 0L
+      var versioned = false
+    }
+    val groups = new java.util.HashMap[(String, UTF8String), Acc]()
+    var ord = part.toLong << 33
+    rows.foreach { r =>
+      val ty = str(r, t)
+      val (kind, key) =
+        if (ty == null) ("untyped", null)
+        else if (ty == RecordType && r.isNullAt(record)) ("null_record", null)
+        else if (!KnownTypes(ty)) ("unknown", ty)
+        else if (ty == RecordType) ("record", str(r, stream))
+        else if (ty == StateType) ("state", null)
+        else ("control", str(r, value))
+      var g = groups.get((kind, key))
+      if (g == null) {
+        val k = if (key == null) null else key.clone()
+        g = new Acc(ord)
+        if (kind == "control") g.last = k
+        groups.put((kind, k), g)
+      }
+      g.lastOrd = ord
+      if (kind != "record" && kind != "control") g.last = str(r, value).clone()
+      g.n += 1
+      g.versioned ||= !r.isNullAt(version)
+      ord += 1
+    }
+    groups.asScala.map { case ((kind, key), g) =>
+      ControlGroup(kind, Option(key).map(_.toString).orNull, g.ord, g.lastOrd,
+        Option(g.last).map(_.toString).orNull, g.n, g.versioned)
+    }.toArray
+  }
+
+  /** JSON-Schema record violations (singer-sdk parity, reference standard
     * suite tests/test_core.py:26-33): every RECORD must *contain* each
     * `required` property (present-but-null is valid when the type union
     * admits "null" — `json_object_keys` gives exact presence semantics,
     * where a post-parse NULL check could not tell missing from null), and
     * every `key_properties` column must be non-NULL (it is the primary
-    * key). One counting aggregation, grouped by stream, over the persisted
-    * routed cache covers every constrained stream; streams that declare no
-    * constraints are not scanned, and with none the job is skipped. */
-  private def validate(routed: DataFrame, streams: Seq[SchemaMessage]): Unit = {
+    * key). ONE Spark job over the persisted routed cache covers every
+    * constrained stream: Catalyst keeps the violating RECORDs, each
+    * partition folds them per stream into a count and its byte-wise largest
+    * record (the example `max` would pick), and the driver merges the
+    * partials. Streams that declare no constraints are not scanned, and with
+    * none the job is skipped. Only streams with a violation are returned. */
+  private[graft] def violations(routed: DataFrame,
+      streams: Seq[SchemaMessage]): Map[String, (Long, String)] = {
     val checks = streams.flatMap { sm =>
-      val required = JsonSchemaConverter.requiredFields(sm.schemaJson)
       val violations =
-        required.map(f =>
+        JsonSchemaConverter.requiredFields(sm.schemaJson).map(f =>
           !array_contains(expr("json_object_keys(record)"), lit(f))) ++
         sm.keyProperties.map(k => get_json_object(col("record"), s"$$['$k']").isNull)
-      violations.reduceOption(_ || _).map(bad => (sm, required, bad))
+      violations.reduceOption(_ || _).map(sm.stream -> _)
     }
-    if (checks.isEmpty) return
-    val bad = checks.tail.foldLeft(
-      when(col("stream") === checks.head._1.stream, checks.head._3)) {
-      case (acc, (sm, _, b)) => acc.when(col("stream") === sm.stream, b)
+    if (checks.isEmpty) return Map.empty
+    val bad = checks.tail.foldLeft(when(col("stream") === checks.head._1, checks.head._2)) {
+      case (acc, (s, b)) => acc.when(col("stream") === s, b)
     }
-    val found = routed
-      .filter(col("t") === "RECORD" && col("stream").isin(checks.map(_._1.stream): _*))
-      .groupBy(col("stream"))
-      .agg(count(when(bad, 1)).as("n"), max(when(bad, col("record"))).as("example"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getString(2))).toMap
-    checks.foreach { case (sm, required, _) =>
-      found.get(sm.stream).filter(_._1 > 0).foreach { case (n, example) =>
+    def larger(a: String, b: String) =
+      if (b == null || (a != null &&
+          UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) >= 0)) a
+      else b
+    routed
+      .filter(col("t") === "RECORD" && col("stream").isin(checks.map(_._1): _*) && bad)
+      .select(col("stream"), col("record"))
+      .queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(SingerLoader.foldViolations(rows)))
+      .collect().toSeq.flatten
+      .groupMapReduce(_._1)(v => (v._2, v._3)) { case ((n, a), (m, b)) => (n + m, larger(a, b)) }
+  }
+
+  /** One partition's share of [[violations]]: per stream, the count of its
+    * violating `(stream, record)` rows and the byte-wise largest record. */
+  private def foldViolations(rows: Iterator[InternalRow]): Array[(String, Long, String)] = {
+    final class Acc(var n: Long, var max: UTF8String)
+    val found = new java.util.HashMap[UTF8String, Acc]()
+    rows.foreach { r =>
+      var acc = found.get(r.getUTF8String(0))
+      if (acc == null) {
+        acc = new Acc(0L, null)
+        found.put(r.getUTF8String(0).clone(), acc)
+      }
+      acc.n += 1
+      // a RECORD without a payload counts, as `count` counted it, but is
+      // no example, as `max` skips NULLs
+      if (!r.isNullAt(1) && (acc.max == null || r.getUTF8String(1).binaryCompare(acc.max) > 0))
+        acc.max = r.getUTF8String(1).clone()
+    }
+    found.asScala.map { case (s, acc) =>
+      (s.toString, acc.n, Option(acc.max).map(_.toString).orNull)
+    }.toArray
+  }
+
+  /** Raises on the first stream (in `streams` order) with a record that
+    * violates its declared schema; see [[violations]]. */
+  private def validate(routed: DataFrame, streams: Seq[SchemaMessage]): Unit = {
+    val found = violations(routed, streams)
+    streams.foreach { sm =>
+      found.get(sm.stream).foreach { case (n, example) =>
+        val required = JsonSchemaConverter.requiredFields(sm.schemaJson)
         throw new RecordValidationException(
           s"stream '${sm.stream}': $n record(s) violate the " +
             s"declared schema (required: ${required.mkString(",")}; " +

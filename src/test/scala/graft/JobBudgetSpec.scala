@@ -1,8 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import org.apache.spark.GraftSparkInternals
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, StageInfo}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark-job budgets for the query entries whose eager build-time actions
@@ -23,12 +26,17 @@ class JobBudgetSpec extends AnyFunSuite {
     "dedup_winnow_clusters" -> 12,
     "text_overlap_matrix" -> 8)
 
-  private def jobsDuring(body: => Unit): Int = {
+  /** The jobs started and the stages completed while `body` runs. */
+  private def during(body: => Unit): (Int, Seq[StageInfo]) = {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger()
+    val stages = new ConcurrentLinkedQueue[StageInfo]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(); ()
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        stages.add(e.stageInfo); ()
       }
     }
     GraftSparkInternals.drainListenerBus(sc)
@@ -36,13 +44,15 @@ class JobBudgetSpec extends AnyFunSuite {
     try {
       body
       GraftSparkInternals.drainListenerBus(sc)
-      jobs.get
+      (jobs.get, stages.asScala.toSeq)
     } finally {
       sc.removeSparkListener(listener)
       spark.catalog.clearCache()
       sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     }
   }
+
+  private def jobsDuring(body: => Unit): Int = during(body)._1
 
   for ((entry, budget) <- budgets)
     test(s"$entry builds and runs in at most $budget Spark jobs") {
@@ -69,12 +79,29 @@ class JobBudgetSpec extends AnyFunSuite {
     f.toString
   }
 
-  test("a 3-stream sync with compaction and ACTIVATE_VERSION runs at most 6 Spark jobs") {
+  /** The first sync into a fresh destination, then `observe` of the
+    * second (compacting, validating and purging) sync. */
+  private def secondSync[A](observe: (=> Unit) => A): A = {
     val config = graft.core.GraftConfig(hdfsDestinationPath =
       java.nio.file.Files.createTempDirectory("graft-budget").toString)
     graft.loader.SingerLoader.loadFile(spark, sync(1, 1 to 20), config)
     val second = sync(2, 21 to 40)
-    val n = jobsDuring(graft.loader.SingerLoader.loadFile(spark, second, config))
-    assert(n <= 6, s"the sync ran $n jobs")
+    observe(graft.loader.SingerLoader.loadFile(spark, second, config))
+  }
+
+  // the control fold, the validation fold and the staged write
+  test("a 3-stream sync with compaction and ACTIVATE_VERSION runs at most 3 Spark jobs") {
+    val n = secondSync(jobsDuring(_))
+    assert(n >= 1 && n <= 3, s"the sync ran $n jobs")
+  }
+
+  test("an unpartitioned 3-stream sync runs no shuffle stage") {
+    val (_, stages) = secondSync(during(_))
+    assert(stages.nonEmpty)
+    val shuffling = stages.filter { st =>
+      val m = st.taskMetrics
+      m.shuffleWriteMetrics.recordsWritten > 0 || m.shuffleReadMetrics.recordsRead > 0
+    }
+    assert(shuffling.isEmpty, shuffling.map(_.name).mkString("\n"))
   }
 }

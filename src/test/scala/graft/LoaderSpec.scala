@@ -685,7 +685,7 @@ class LoaderSpec extends AnyFunSuite {
     // the fused control pass must collect O(streams + distinct control
     // lines), not one row per STATE: 1 schema line + 1 record stream + 1
     // surviving state
-    val collected = SingerLoader.controlPass(SingerLoader.route(lines)).collect()
+    val collected = SingerLoader.controlPass(SingerLoader.route(lines))
     assert(collected.length <= 3, collected.mkString("\n"))
 
     // end-to-end: the LAST state in input order wins
@@ -693,6 +693,95 @@ class LoaderSpec extends AnyFunSuite {
       GraftConfig(hdfsDestinationPath = tmpDir()))
     assert(result.lastState.exists(_.contains((n - 1).toString)))
     assert(result.streams === Seq("t"))
+  }
+
+  test("the control and validation folds equal a sequential reference at 1 to 8 partitions") {
+    import spark.implicits._
+    import graft.core.{SchemaMessage, SingerMessage}
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val schemaLines = Seq(
+      """{"type": "SCHEMA", "stream": "a", "schema": {"type": "object", "required": ["id"], "properties": {"id": {"type": ["integer", "null"]}, "s": {"type": "string"}}}, "key_properties": ["id"]}""",
+      """{"type": "SCHEMA", "stream": "b", "schema": {"type": "object", "properties": {"k": {"type": ["integer", "null"]}, "s": {"type": "string"}}}, "key_properties": ["k"]}""",
+      """{"type": "SCHEMA", "stream": "c", "schema": {"type": "object", "properties": {"s": {"type": "string"}}}}""")
+    val schemas = schemaLines.map(l => SingerMessage.parse(l).asInstanceOf[SchemaMessage])
+    // non-ASCII strings: the example is the byte-wise largest record as
+    // `json_tuple` renders it (its UTF-8 generator escapes a surrogate pair)
+    val words = Seq("x", "\u00e9", "\uE000", "\uD83D\uDE00", "zz", "")
+    def lines(seed: Int): Seq[String] = {
+      val rnd = new scala.util.Random(seed)
+      def field(name: String) = rnd.nextInt(4) match {
+        case 0 => None
+        case 1 => Some(s""""$name":null""")
+        case _ => Some(s""""$name":${rnd.nextInt(50)}""")
+      }
+      Seq.fill(300)(rnd.nextInt(20) match {
+        case 0 => schemaLines(rnd.nextInt(3))
+        case 1 | 2 => s"""{"type": "STATE", "value": {"n": ${rnd.nextInt(1000)}}}"""
+        case 3 => s"""{"type": "ACTIVATE_VERSION", "stream": "a", "version": ${rnd.nextInt(3)}}"""
+        case 4 => Seq("", "   ")(rnd.nextInt(2))
+        case 5 => Seq("""{"stream": "a"}""", "not json", """{"type": "RECORD", "stream": "b"}""",
+          s"""{"type": "BOGUS${rnd.nextInt(3)}"}""")(rnd.nextInt(4))
+        case _ =>
+          val fields = Seq(field("id"), field("k"),
+            Some(s""""s":"${words(rnd.nextInt(words.size))}${rnd.nextInt(100)}"""")).flatten
+          val version = if (rnd.nextInt(4) == 0) s""", "version": ${rnd.nextInt(3)}""" else ""
+          s"""{"type": "RECORD", "stream": "${"abc" (rnd.nextInt(3))}", "record": {${fields.mkString(",")}}$version}"""
+      })
+    }
+
+    /** The control plane and the violations, one line at a time. */
+    def reference(ls: Seq[String]) = {
+      val control = scala.collection.mutable.LinkedHashSet.empty[String]
+      val unknown = scala.collection.mutable.LinkedHashSet.empty[String]
+      val records = scala.collection.mutable.Map.empty[String, (Long, Boolean)]
+      val bad = scala.collection.mutable.Map.empty[String, (Long, String)]
+      var state, untyped, nullRecord: Option[String] = None
+      def byteOrder(a: String, b: String) = java.util.Arrays.compareUnsigned(
+        a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+      ls.filter(_.exists(_ != ' ')).foreach { line =>
+        val node = scala.util.Try(mapper.readTree(line)).toOption.filter(_.isObject)
+        def text(f: String) = node.flatMap(n => Option(n.get(f))).filterNot(_.isNull)
+          .map(v => if (v.isTextual) v.asText else new String(mapper.writeValueAsBytes(v), "UTF-8"))
+        (text("type"), text("record")) match {
+          case (None, _) => untyped = Some(line)
+          case (Some("RECORD"), None) =>
+            nullRecord = Some(line)
+            // no payload: no key present, so a violation without an example
+            text("stream").filter(Set("a", "b")).foreach { stream =>
+              val (m, ex) = bad.getOrElse(stream, (0L, null))
+              bad(stream) = (m + 1, ex)
+            }
+          case (Some(t), _) if !Set("RECORD", "SCHEMA", "STATE", "ACTIVATE_VERSION", "BATCH")(t) =>
+            unknown += t
+          case (Some("RECORD"), Some(rec)) =>
+            val stream = text("stream").get
+            val (n, v) = records.getOrElse(stream, (0L, false))
+            records(stream) = (n + 1, v || text("version").isDefined)
+            val r = node.get.get("record")
+            def missing(f: String) = !r.has(f) || r.get(f).isNull
+            if ((stream == "a" && missing("id")) || (stream == "b" && missing("k"))) {
+              val (m, ex) = bad.getOrElse(stream, (0L, null))
+              bad(stream) = (m + 1, if (ex == null || byteOrder(rec, ex) > 0) rec else ex)
+            }
+          case (Some("STATE"), _) => state = Some(line)
+          case _ => control += line
+        }
+      }
+      (control.toSeq, state.toSeq, untyped.toSeq, nullRecord.toSeq, unknown.toSeq,
+        records.toMap, bad.toMap)
+    }
+
+    for (seed <- 1 to 3; k <- 1 to 8) {
+      val ls = lines(seed)
+      val routed = SingerLoader.route(spark.createDataset(spark.sparkContext.parallelize(ls, k)))
+      val pass = SingerLoader.controlPass(routed)
+      def of(kind: String) = pass.filter(_.kind == kind)
+      val got = (of("control").map(_.last), of("state").map(_.last),
+        of("untyped").map(_.last), of("null_record").map(_.last), of("unknown").map(_.key),
+        of("record").map(g => g.key -> (g.n, g.versioned)).toMap,
+        SingerLoader.violations(routed, schemas))
+      assert(got === reference(ls), s"seed $seed, $k partitions")
+    }
   }
 
   // ---- protocol failure paths of the control pass ------------------------

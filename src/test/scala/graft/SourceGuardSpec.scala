@@ -80,4 +80,25 @@ class SourceGuardSpec extends AnyFunSuite {
     // the append path's DataFrame write, next to it, is the only other writer
     assert(files(loader(codeHits(".write"))) === Seq("graft/loader/ParquetSink.scala"))
   }
+
+  test("every ParquetFileReader.open passes read options built from a given conf") {
+    // `open(InputFile)` alone builds a fresh Hadoop Configuration per file
+    // and ignores the session's parquet read options
+    val calls = sources.flatMap { case (p, text) =>
+      val needle = "ParquetFileReader.open("
+      Iterator.iterate(text.indexOf(needle))(i => text.indexOf(needle, i + 1))
+        .takeWhile(_ >= 0).map { i =>
+          // the call's argument list, up to its matching close paren
+          val args = text.iterator.drop(i + needle.length).scanLeft(1) {
+            case (depth, '(') => depth + 1
+            case (depth, ')') => depth - 1
+            case (depth, _) => depth
+          }.drop(1).takeWhile(_ > 0).length
+          root.relativize(p).toString -> text.slice(i, i + needle.length + args)
+        }.toList
+    }
+    assert(calls.nonEmpty)
+    for ((file, call) <- calls)
+      assert(call.contains("HadoopReadOptions.builder("), s"$file: $call")
+  }
 }
